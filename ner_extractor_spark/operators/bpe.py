@@ -80,26 +80,20 @@ def apply_merge(syms_col, left: str, right: str):
 
 
 def train_bpe(docs: DataFrame, n_merges: int = 8,
-              text_col: str = "text", fuse: int = 1) -> DataFrame:
+              text_col: str = "text") -> DataFrame:
     """Learn ``n_merges`` merge rules; returns (rank, left, right,
     merged, c) ordered by rank — the artifact a tokenizer ships.
 
-    ``fuse`` (r07, the ``bpe_encode`` chunking discipline): merge
-    applications may CHAIN LAZILY onto the checkpointed word table,
-    with a lineage barrier only every ``fuse`` rules; the final
-    round's table is discarded, so its barrier is always skipped.
-    Identical rules for any ``fuse`` — the fold chain is
-    deterministic.  DEFAULT 1 (barrier per round, minus the trailing
-    one): fuse >= 2 measured NEUTRAL warm in isolation but SLOWER
-    in-suite (each argmax job then carries a deeper fold expression —
-    a fresh whole-stage-codegen compile per round per query; the
-    saved barrier jobs did not pay for the compile storms)."""
-    if fuse <= 0:
-        raise ValueError("fuse must be positive")
+    Each round's merged word table gets a lineage barrier, except the
+    final round's, which is discarded.  Fusing several rounds between
+    barriers (the ``bpe_encode`` chunking) measured NEUTRAL warm in
+    isolation but SLOWER in-suite (each argmax job then carries a
+    deeper fold expression — a fresh whole-stage-codegen compile per
+    round per query; the saved barrier jobs did not pay for the
+    compile storms)."""
     spark = docs.sparkSession
     words = init_symbols(word_counts(docs, text_col)).localCheckpoint()
     rules = []
-    pending = 0
     for rank in range(1, n_merges + 1):
         top = (adjacent_pair_counts(words)
                .orderBy(F.desc("c"), F.asc("left"), F.asc("right"))
@@ -111,13 +105,11 @@ def train_bpe(docs: DataFrame, n_merges: int = 8,
         words = words.select(
             "word", "cnt",
             apply_merge(F.col("syms"), left, right).alias("syms"))
-        pending += 1
-        # barrier every `fuse` rules (bounds codegen depth and keeps
-        # the per-round re-evaluation small); the final round's words
-        # table is discarded, so no trailing barrier
-        if pending == fuse and rank < n_merges:
+        # barrier every round (bounds codegen depth and keeps the
+        # per-round re-evaluation small); the final round's words table
+        # is discarded, so no trailing barrier
+        if rank < n_merges:
             words = words.localCheckpoint()
-            pending = 0
     return spark.createDataFrame(
         rules, "rank int, left string, right string, merged string, c bigint")
 

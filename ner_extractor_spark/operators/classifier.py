@@ -237,7 +237,6 @@ def classify_docs_calibrated(docs: DataFrame, weights: DataFrame,
                              text_col: str = "text",
                              bias: float = 0.0,
                              n_buckets: int = N_BUCKETS,
-                             checkpoint: bool = True,
                              approx: bool = False,
                              accuracy: int = 10000) -> DataFrame:
     """``classify_docs`` with the threshold derived from the corpus'
@@ -249,13 +248,10 @@ def classify_docs_calibrated(docs: DataFrame, weights: DataFrame,
     and the gated output read the materialized copy — without the
     barrier the explode → join → agg pipeline would run twice, once
     under each consumer.  The 1-row threshold then rides a broadcast
-    cross join.  ``checkpoint=False`` keeps the plan fully lazy for
-    callers that manage their own barrier."""
+    cross join."""
     scored = classify_docs(docs, weights, id_col=id_col,
                            text_col=text_col, bias=bias,
-                           n_buckets=n_buckets)
-    if checkpoint:
-        scored = scored.localCheckpoint()
+                           n_buckets=n_buckets).localCheckpoint()
     thr = calibrate_classifier_threshold(scored, keep_rate=keep_rate,
                                          approx=approx, accuracy=accuracy)
     return (scored.drop("keep").crossJoin(F.broadcast(thr))

@@ -30,8 +30,7 @@ from ner_extractor_spark.operators.lm import trigram_logprob, trigram_model
 def curation_scores(docs: DataFrame, *, id_col: str = "doc_id",
                     text_col: str = "text",
                     lm_join: str = "broadcast",
-                    shingles: DataFrame | None = None,
-                    materialize_model: bool = True) \
+                    shingles: DataFrame | None = None) \
         -> tuple[DataFrame, DataFrame]:
     """(lm, dup): the two corpus-statistics per-document score tables
     the curation chain consumes — ``trigram_logprob`` under the
@@ -52,8 +51,7 @@ def curation_scores(docs: DataFrame, *, id_col: str = "doc_id",
     to pick by model row count (costs an eager count job)."""
     lm = trigram_logprob(docs, trigram_model(docs, text_col=text_col),
                          id_col=id_col, text_col=text_col,
-                         join_mode=lm_join,
-                         materialize_model=materialize_model)
+                         join_mode=lm_join)
     dup = dup_ngram_fraction(docs, id_col=id_col, text_col=text_col,
                              shingles=shingles)
     return lm, dup
@@ -235,24 +233,19 @@ def calibrated_curation(docs: DataFrame, *, id_col: str = "doc_id",
                         text_col: str = "text",
                         lm_quantile: float = 0.05,
                         dup_quantile: float = 0.95,
-                        checkpoint: bool = True,
                         lm_join: str = "broadcast",
                         approx: bool = False,
                         accuracy: int = 10000,
                         near: DataFrame | bool = False) -> DataFrame:
     """The calibrate-then-curate composition with ONE corpus pass per
-    score family (VERDICT r04 #2): ``curation_scores`` runs once, each
-    score table is localCheckpoint-ed (an eager, executor-materialized
-    barrier — the per-doc score tables are corpus-row-count-sized,
-    far smaller than the exploded intermediates they summarize), and
-    the SAME pinned DataFrames feed both the percentile calibration
-    and the verdict joins.  Without the barrier the trigram-model
-    aggregation and the shingle-df explode/join would each execute
-    twice — two redundant full-corpus shuffle passes at 100 TB.
-
-    ``checkpoint=False`` keeps the plan lazy (the two consumers then
-    rely on Spark's ReuseExchange to dedupe the identical subplans
-    where it applies).
+    score family: each score table is localCheckpoint-ed (an eager,
+    executor-materialized barrier — the per-doc score tables are
+    corpus-row-count-sized, far smaller than the exploded
+    intermediates they summarize), and the SAME pinned DataFrames feed
+    both the percentile calibration and the verdict joins.  Without
+    the barrier the trigram-model aggregation and the shingle-df
+    explode/join would each execute twice — two redundant full-corpus
+    shuffle passes at 100 TB.
 
     ``lm_join``/``approx``/``accuracy``/``near`` thread straight
     through to ``trigram_logprob`` / ``calibrate_thresholds`` /
@@ -265,71 +258,50 @@ def calibrated_curation(docs: DataFrame, *, id_col: str = "doc_id",
     ``dup_ngram_fraction`` and the MinHash signature aggregate both
     consume the same localCheckpoint-ed (doc, shingle) table, so the
     near-dup verdict costs one shingle explode, not two.  (That
-    barrier is per-(doc, distinct-3gram) — corpus-token-class; at
-    petabyte scale swap it for a persisted ``write_stage`` parquet,
-    the exact_substr/winnow posture, or pass ``checkpoint=False`` to
-    trade re-computation for zero materialization.)"""
-    if checkpoint:
-        # TWO CONCURRENT DRIVER CHAINS (r07, extending the r06
-        # two-thread barrier — guide §2.6 overlap-independent-jobs):
-        #
-        #   chain A: trigram model ckpt -> LM scoring ckpt
-        #   chain B: shingle explode ckpt (near only) -> dup-fraction
-        #            ckpt -> near-dup LSH + CC closure (near only)
-        #
-        # The LM chain and the shingle chain touch disjoint state, so
-        # each chain's barriers/stragglers back-fill with the other
-        # chain's tasks; the r06 form serialized the model pass, the
-        # shingle pass and the CC rounds ahead of the two-thread lm/dup
-        # step.  Results are identical — both chains are deterministic
-        # and independent, and every barrier lands on the same tables
-        # as before.
-        from concurrent.futures import ThreadPoolExecutor
+    barrier is per-(doc, distinct-3gram) — corpus-token-class; for
+    beyond-memory corpora persist it as a ``write_stage`` parquet,
+    the exact_substr/winnow posture.)
 
-        from .lm import trigram_logprob, trigram_model
+    The two chains run on two driver threads; a failing chain raises
+    only after the sibling chain's running jobs finish."""
+    # TWO CONCURRENT DRIVER CHAINS:
+    #
+    #   chain A: trigram model ckpt -> LM scoring ckpt
+    #   chain B: shingle explode ckpt (near only) -> dup-fraction
+    #            ckpt -> near-dup LSH + CC closure (near only)
+    #
+    # The LM chain and the shingle chain touch disjoint state, so each
+    # chain's barriers/stragglers back-fill with the other chain's
+    # tasks.  Both chains are deterministic and independent, so the
+    # result does not depend on how their jobs interleave.
+    from concurrent.futures import ThreadPoolExecutor
 
-        def chain_lm():
-            model = trigram_model(docs, text_col=text_col) \
-                .localCheckpoint()
-            return trigram_logprob(docs, model, id_col=id_col,
-                                   text_col=text_col, join_mode=lm_join,
-                                   materialize_model=False) \
-                .localCheckpoint()
+    def chain_lm():
+        # trigram_logprob checkpoints the model itself
+        return trigram_logprob(docs, trigram_model(docs, text_col=text_col),
+                               id_col=id_col, text_col=text_col,
+                               join_mode=lm_join).localCheckpoint()
 
-        def chain_dup(near):
-            shingles = None
-            if near is True:
-                from .dedup import word_shingles
-                shingles = docs.select(
-                    F.col(id_col),
-                    F.explode(word_shingles(F.col(text_col)))
-                    .alias("shingle")).localCheckpoint()
-            dup = dup_ngram_fraction(docs, id_col=id_col,
-                                     text_col=text_col,
-                                     shingles=shingles) \
-                .localCheckpoint()
-            if near is True:
-                near = near_dup_keepers(docs, id_col=id_col,
-                                        text_col=text_col,
-                                        shingles=shingles)
-            return dup, near
-
-        with ThreadPoolExecutor(2) as pool:
-            f_lm = pool.submit(chain_lm)
-            f_dup = pool.submit(chain_dup, near)
-            lm = f_lm.result()
-            dup, near = f_dup.result()
-    else:
+    def chain_dup(near):
         shingles = None
         if near is True:
             from .dedup import word_shingles
             shingles = docs.select(
                 F.col(id_col),
-                F.explode(word_shingles(F.col(text_col))).alias("shingle"))
-            near = near_dup_keepers(docs, id_col=id_col, text_col=text_col,
-                                    shingles=shingles)
-        lm, dup = curation_scores(docs, id_col=id_col, text_col=text_col,
-                                  lm_join=lm_join, shingles=shingles)
+                F.explode(word_shingles(F.col(text_col)))
+                .alias("shingle")).localCheckpoint()
+        dup = dup_ngram_fraction(docs, id_col=id_col, text_col=text_col,
+                                 shingles=shingles).localCheckpoint()
+        if near is True:
+            near = near_dup_keepers(docs, id_col=id_col,
+                                    text_col=text_col, shingles=shingles)
+        return dup, near
+
+    with ThreadPoolExecutor(2) as pool:
+        f_lm = pool.submit(chain_lm)
+        f_dup = pool.submit(chain_dup, near)
+        lm = f_lm.result()
+        dup, near = f_dup.result()
     thr = calibrate_thresholds(scores=(lm, dup),
                                lm_quantile=lm_quantile,
                                dup_quantile=dup_quantile,

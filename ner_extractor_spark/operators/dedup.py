@@ -112,8 +112,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4,
 def winnow_matches(docs: DataFrame, k: int = 5, w: int = 4,
                    min_shared: int = 1, max_df: int | None = None,
                    id_col: str = "doc_id",
-                   text_col: str = "text",
-                   checkpoint: bool = True) -> DataFrame:
+                   text_col: str = "text") -> DataFrame:
     """Cross-document winnow overlap report — the MOSS match step that
     ``winnow_fingerprints`` exists to feed (VERDICT r04 #3): explode
     each document's fingerprint set, join documents sharing a
@@ -138,12 +137,12 @@ def winnow_matches(docs: DataFrame, k: int = 5, w: int = 4,
     The exploded fingerprint table has THREE consumers (the df
     profile and both sides of the pair join) — without a barrier the
     rolling-hash pass would execute once per consumer (measured 3×
-    at sf0.1), so it is localCheckpoint-ed once by default (the
-    calibrated_curation discipline); ``checkpoint=False`` keeps the
-    plan lazy.  At petabyte scale, where the exploded table outgrows
-    executor storage, replace the localCheckpoint with a persisted
-    parquet stage (``plans/checkpoints.write_stage``) feeding the
-    three consumers — same barrier semantics, durable storage."""
+    at sf0.1), so it is localCheckpoint-ed once (the
+    calibrated_curation discipline).  At petabyte scale, where the
+    exploded table outgrows executor storage, replace the
+    localCheckpoint with a persisted parquet stage
+    (``plans/checkpoints.write_stage``) feeding the three consumers —
+    same barrier semantics, durable storage."""
     # explode_outer, not explode: plain explode plants an implicit
     # size(fingerprints) > 0 guard that Catalyst pushes below the
     # input-spread Exchange as a scan filter — evaluating the ENTIRE
@@ -153,9 +152,8 @@ def winnow_matches(docs: DataFrame, k: int = 5, w: int = 4,
     # outer variant is row-identical and generates no pushable filter.
     ex = (winnow_fingerprints(docs, k=k, w=w, id_col=id_col,
                               text_col=text_col)
-          .select("doc_id", F.explode_outer("fingerprints").alias("fp")))
-    if checkpoint:
-        ex = ex.localCheckpoint()
+          .select("doc_id", F.explode_outer("fingerprints").alias("fp"))
+          .localCheckpoint())
     if max_df is not None:
         keep = (ex.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
                 .filter(F.col("df") <= max_df).select("fp"))
@@ -252,7 +250,11 @@ def ngram_jaccard(docs: DataFrame, pairs: DataFrame,
     ``shingle_n``) — the two-phase composition then shares ONE corpus
     shingle pass between candidate generation (``minhash_lsh_pairs``)
     and this verification instead of re-shingling the candidate
-    documents."""
+    documents.  Its n is fixed when it is built, so a non-default
+    ``shingle_n`` alongside it is rejected."""
+    if shingles is not None and shingle_n != 3:
+        raise ValueError("shingle_n does not apply to a pre-built "
+                         "shingles table; build it with that n instead")
     pairs = pairs.localCheckpoint()
     ids = (pairs.select(F.col("a").alias("id"))
            .unionByName(pairs.select(F.col("b").alias("id")))
@@ -318,7 +320,14 @@ def simhash_segments(n_bits: int, max_hamming: int) -> list:
     segments, longest segments first.  With h diffs spread over h+1
     segments, at least one segment is diff-free — that is the ONLY split
     count with a recall guarantee at hamming ≤ h (2 halves guarantee
-    only hamming ≤ 1; round-2 shipped exactly that bug)."""
+    only hamming ≤ 1; round-2 shipped exactly that bug).
+
+    ``n_bits`` is capped at 63: ``simhash_block_pairs`` packs the
+    fingerprint into one signed long, and a 64th bit overflows it
+    (ARITHMETIC_OVERFLOW under ANSI mode, a silent wrap without)."""
+    if n_bits > 63:
+        raise ValueError(f"n_bits={n_bits} does not fit a long; "
+                         "the fingerprint holds at most 63 bits")
     if max_hamming < 0:
         raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
     n_seg = max_hamming + 1
@@ -589,6 +598,10 @@ def blocking_stats(docs: DataFrame, id_col: str = "doc_id",
     which also guarantees both sides measure the SAME ``shingle_n``
     similarity, so the completeness/quality numbers audit the
     blocking against its own metric.
+
+    The candidate and truth tables are materialized on two driver
+    threads; a failing side raises only after the sibling side's
+    running jobs finish.
     """
     if not threshold > 0:
         # jaccard >= 0 holds for every pair, including the non-

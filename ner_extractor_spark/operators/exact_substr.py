@@ -43,9 +43,10 @@ def _positional_grams(docs: DataFrame, n: int, id_col: str,
     shrink ~4x.  (Engine-portable md5 is required only where the
     ORACLE must replay the same hash VALUES — winnow fingerprints,
     minhash signatures; here both engines just need their own
-    collision-free equality key, and 64 bits over a corpus-bounded
-    gram vocabulary is collision-safe in expectation far beyond any
-    practical corpus.)"""
+    equality key.)  Collisions follow the birthday bound: G distinct
+    grams give about G²/2⁶⁵ expected colliding pairs — ≈0.03 at
+    G = 10⁹, but ≈2.7·10⁴ at G = 10¹².  A collision can lift a unique
+    gram to df >= ``min_df`` and flag a non-duplicate span."""
     toks = F.split(normalize_text(F.col(text_col)), " ")
 
     def grams(tl):
@@ -67,7 +68,6 @@ def exact_substring_spans(docs: DataFrame, n: int = 8, *,
                           min_df: int = 2,
                           id_col: str = "doc_id",
                           text_col: str = "text",
-                          checkpoint: bool = True,
                           stage_dir: str | None = None) -> DataFrame:
     """(doc_id, start, end, n_tokens): maximal token spans [start, end]
     (0-based, inclusive) whose every ``n``-gram occurs in >= ``min_df``
@@ -82,17 +82,14 @@ def exact_substring_spans(docs: DataFrame, n: int = 8, *,
     Barrier posture (VERDICT r05 #2): the positional-gram table is ONE
     ROW PER CORPUS TOKEN — the largest intermediate in this repo, far
     beyond the per-doc score tables the localCheckpoint discipline was
-    sized for.  The default ``checkpoint=True`` localCheckpoint is
-    right at sandbox scale (it stops the explode re-running for the
-    two consumers: df profile + join-back); for beyond-memory corpora
-    either (a) pass ``stage_dir=`` — the gram table is then persisted
-    as a parquet stage (``plans/checkpoints.write_stage``: durable,
-    resumable, never resident in executor storage) and both consumers
-    read the files, the same durable-barrier swap ``winnow_matches``
-    documents for its exploded fingerprint table — or (b) pass
-    ``checkpoint=False`` and accept the explode running twice: the
-    gram table is then never materialized anywhere, and both passes
-    are embarrassingly parallel map work.
+    sized for.  The default localCheckpoint is right at sandbox scale
+    (it stops the explode re-running for the two consumers: df
+    profile + join-back); for beyond-memory corpora pass
+    ``stage_dir=`` — the gram table is then persisted as a parquet
+    stage (``plans/checkpoints.write_stage``: durable, resumable,
+    never resident in executor storage) and both consumers read the
+    files, the same durable-barrier swap ``winnow_matches`` documents
+    for its exploded fingerprint table.
     """
     grams = _positional_grams(docs, n, id_col, text_col)
     if stage_dir is not None:
@@ -100,10 +97,10 @@ def exact_substring_spans(docs: DataFrame, n: int = 8, *,
                                                            write_stage)
         grams = write_stage(StageManifest(stage_dir), "positional_grams",
                             grams)
-    elif checkpoint:
+    else:
         # two consumers (df profile + join-back) — one barrier, the
         # winnow_matches discipline; see the docstring for the
-        # durable-stage / no-barrier alternatives at corpus scale
+        # durable-stage alternative at corpus scale
         grams = grams.localCheckpoint()
     hot = (grams.groupBy("g")
            .agg(F.count_distinct("doc_id").alias("df"))

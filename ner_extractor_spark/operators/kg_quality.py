@@ -200,25 +200,22 @@ def fact_timeline(triples: DataFrame, pages: DataFrame) -> DataFrame:
 
 def distinct_pairs(triples: DataFrame, *,
                    subj_col: str = "subj_surface",
-                   obj_col: str = "obj_surface",
-                   materialize: bool = True) -> DataFrame:
+                   obj_col: str = "obj_surface") -> DataFrame:
     """The (x, pred, y) distinct-fact table ``mine_rules`` /
     ``infer_facts`` operate on, materialized once (r07): a caller
     running mine-then-infer passes the SAME checkpointed table to both
     via ``pairs=`` so the upstream extraction pipeline runs once, not
     once per operator (the calibrated_curation score-sharing
-    discipline).  ``materialize=False`` keeps it lazy (beyond-memory
-    corpora persist a parquet stage instead — see mine_rules)."""
-    P = (triples.select(F.col(subj_col).alias("x"), "pred",
-                        F.col(obj_col).alias("y"))
-         .distinct())
-    return P.localCheckpoint() if materialize else P
+    discipline).  Beyond-memory corpora persist a parquet stage
+    instead — see mine_rules."""
+    return (triples.select(F.col(subj_col).alias("x"), "pred",
+                           F.col(obj_col).alias("y"))
+            .distinct().localCheckpoint())
 
 
 def mine_rules(triples: DataFrame, *, min_support: int = 2,
                min_conf: float = 0.05, chain: bool = True,
                max_fanout: int | None = 64,
-               materialize: bool = True,
                subj_col: str = "subj_surface",
                obj_col: str = "obj_surface",
                pairs: DataFrame | None = None) -> DataFrame:
@@ -256,18 +253,17 @@ def mine_rules(triples: DataFrame, *, min_support: int = 2,
     disables it (exact-audit mode, sandbox scale only).
 
     The distinct pair table P feeds ~8 consumers (bodies, heads,
-    marginals, degree caps); ``materialize=True`` (default) cuts a
-    localCheckpoint barrier after the distinct so the upstream
+    marginals, degree caps), so ``distinct_pairs`` cuts a
+    localCheckpoint barrier after the distinct and the upstream
     extraction pipeline runs ONCE (the calibrated_curation
     discipline).  P is one row per distinct triple — for
     beyond-memory corpora persist it as a parquet stage instead
     (``plans.checkpoints.write_stage``, the winnow_matches posture)
-    and call with ``materialize=False``.  ``pairs=`` (r07) supplies a
+    and pass the stage as ``pairs=``.  ``pairs=`` (r07) supplies a
     precomputed ``distinct_pairs`` table so a mine-then-infer caller
     pays for the extraction pipeline once."""
     P = pairs if pairs is not None else distinct_pairs(
-        triples, subj_col=subj_col, obj_col=obj_col,
-        materialize=materialize)
+        triples, subj_col=subj_col, obj_col=obj_col)
     marg = P.groupBy("pred").agg(F.count(F.lit(1)).alias("n_pairs"))
     head = P.select(F.col("pred").alias("head_pred"), "x", "y")
 
@@ -332,7 +328,6 @@ def mine_rules(triples: DataFrame, *, min_support: int = 2,
 
 def infer_facts(triples: DataFrame, rules: DataFrame, *,
                 min_conf: float = 0.5, max_fanout: int | None = 64,
-                materialize: bool = True,
                 subj_col: str = "subj_surface",
                 obj_col: str = "obj_surface",
                 pairs: DataFrame | None = None) -> DataFrame:
@@ -354,13 +349,12 @@ def infer_facts(triples: DataFrame, rules: DataFrame, *,
     Scale shape: the rule table is broadcast (output of rule mining —
     hundreds of rows at most); candidate generation and the anti-join
     key on the entity pair / triple identity; the chain hop reuses
-    the ``max_fanout`` hub cap.  ``materialize`` barriers the distinct
-    pair table exactly as in ``mine_rules``; ``pairs=`` (r07) reuses a
+    the ``max_fanout`` hub cap.  The distinct pair table is barriered
+    exactly as in ``mine_rules``; ``pairs=`` (r07) reuses a
     caller-materialized ``distinct_pairs`` table (the mine-then-infer
     composition shares one)."""
     P = pairs if pairs is not None else distinct_pairs(
-        triples, subj_col=subj_col, obj_col=obj_col,
-        materialize=materialize)
+        triples, subj_col=subj_col, obj_col=obj_col)
     r = rules.filter(F.col("conf") >= min_conf).select(
         "kind", "head_pred", "body", "conf")
 

@@ -53,8 +53,7 @@ BROADCAST_MAX_MODEL_ROWS = 1_000_000
 def trigram_logprob(docs: DataFrame, model: DataFrame,
                     id_col: str = "doc_id",
                     text_col: str = "text",
-                    join_mode: str = "broadcast",
-                    materialize_model: bool = True) -> DataFrame:
+                    join_mode: str = "broadcast") -> DataFrame:
     """(doc_id, n_tris, lm_score): mean smoothed trigram log-prob of
     each document under ``model`` — low scores = out-of-distribution
     text (gibberish, wrong language, encoding damage).
@@ -71,24 +70,22 @@ def trigram_logprob(docs: DataFrame, model: DataFrame,
     time, which is why it is opt-in rather than the default.  Both
     modes are equality-pinned in tests/test_lm.py.
 
-    ``materialize_model`` (r07, guide §2.4 — remove shuffles
-    outright): the model feeds TWO consumers (the scoring join and the
-    (N, D) normalizer aggregate), and Catalyst does not reuse the
-    exchange between them (the join side plants an isnotnull filter
-    the normalizer side lacks, so the canonical subtrees differ) —
-    without a barrier the full corpus trigram explode+aggregate runs
-    TWICE per scoring pass (measured: one model pass is ~40% of the
-    whole scoring job at sf0.1).  The default localCheckpoint
-    materializes the BOUNDED (≤ |alphabet|³ rows) model once; pass
-    ``False`` only when the caller already materialized it."""
+    The model is localCheckpoint-ed: it feeds TWO consumers (the
+    scoring join and the (N, D) normalizer aggregate), and Catalyst
+    does not reuse the exchange between them (the join side plants an
+    isnotnull filter the normalizer side lacks, so the canonical
+    subtrees differ) — without a barrier the full corpus trigram
+    explode+aggregate runs TWICE per scoring pass (measured: one model
+    pass is ~40% of the whole scoring job at sf0.1).  The barrier
+    materializes the BOUNDED (≤ |alphabet|³ rows) model once, before
+    the ``'auto'`` row count reads it."""
+    if join_mode not in ("broadcast", "shuffle", "auto"):
+        raise ValueError(f"join_mode: {join_mode}")
+    model = model.localCheckpoint()
     if join_mode == "auto":
         join_mode = ("broadcast"
                      if model.count() <= BROADCAST_MAX_MODEL_ROWS
                      else "shuffle")
-    if join_mode not in ("broadcast", "shuffle"):
-        raise ValueError(f"join_mode: {join_mode}")
-    if materialize_model:
-        model = model.localCheckpoint()
     norm = model.agg(F.sum("c").alias("n_total"),
                      F.count(F.lit(1)).alias("n_distinct"))
     tris = docs.select(F.col(id_col).alias("doc_id"),
@@ -111,7 +108,6 @@ def ppl_buckets(docs: DataFrame, *, id_col: str = "doc_id",
                 text_col: str = "text",
                 lm: DataFrame | None = None,
                 lo_q: float = 1 / 3, hi_q: float = 2 / 3,
-                checkpoint: bool = True,
                 join_mode: str = "broadcast",
                 approx: bool = False,
                 accuracy: int = 10000) -> DataFrame:
@@ -150,9 +146,7 @@ def ppl_buckets(docs: DataFrame, *, id_col: str = "doc_id",
     if lm is None:
         lm = trigram_logprob(docs, trigram_model(docs, text_col=text_col),
                              id_col=id_col, text_col=text_col,
-                             join_mode=join_mode)
-        if checkpoint:
-            lm = lm.localCheckpoint()
+                             join_mode=join_mode).localCheckpoint()
     cuts = lm.agg(
         F.round(quantile_agg("lm_score", lo_q, approx, accuracy), 6)
         .alias("lo_cut"),
@@ -170,7 +164,6 @@ def ppl_buckets_grouped(docs: DataFrame, group_col: str, *,
                         id_col: str = "doc_id",
                         text_col: str = "text",
                         lo_q: float = 1 / 3, hi_q: float = 2 / 3,
-                        checkpoint: bool = True,
                         join_mode: str = "broadcast",
                         approx: bool = False,
                         accuracy: int = 10000) -> DataFrame:
@@ -196,9 +189,8 @@ def ppl_buckets_grouped(docs: DataFrame, group_col: str, *,
                          id_col=id_col, text_col=text_col,
                          join_mode=join_mode)
     lm = lm.join(
-        docs.select(F.col(id_col).alias("doc_id"), group_col), "doc_id")
-    if checkpoint:
-        lm = lm.localCheckpoint()
+        docs.select(F.col(id_col).alias("doc_id"), group_col), "doc_id") \
+        .localCheckpoint()
     cuts = lm.groupBy(group_col).agg(
         F.round(quantile_agg("lm_score", lo_q, approx, accuracy), 6)
         .alias("lo_cut"),

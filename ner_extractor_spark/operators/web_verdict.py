@@ -43,7 +43,6 @@ def full_web_verdict(docs: DataFrame, weights: DataFrame, *,
                      dup_quantile: float = 0.95,
                      dup_threshold: float | None = None,
                      lm_threshold: float | None = None,
-                     checkpoint: bool = True,
                      lm_join: str = "broadcast",
                      approx: bool = False,
                      accuracy: int = 10000,
@@ -106,7 +105,6 @@ def full_web_verdict(docs: DataFrame, weights: DataFrame, *,
         cur = calibrated_curation(docs, id_col=id_col, text_col=text_col,
                                   lm_quantile=lm_quantile,
                                   dup_quantile=dup_quantile,
-                                  checkpoint=checkpoint,
                                   lm_join=lm_join, approx=approx,
                                   accuracy=accuracy, near=near)
     else:

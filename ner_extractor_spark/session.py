@@ -83,11 +83,18 @@ def _ship_package(spark: SparkSession) -> None:
     Python workers do not inherit the driver's sys.path; without this,
     any UDF closure referencing package code fails on a cluster (and on
     local[] when the driver isn't launched from the repo root).
+
+    A no-op when this SparkContext already has the zip: ``addPyFile``
+    would log "has been added already" and still append to the
+    context's includes and to ``sys.path`` on every call.
     """
     pkg_dir = Path(__file__).resolve().parent
     zip_path = Path(tempfile.gettempdir()) / f"ner_extractor_spark-{os.getpid()}.zip"
+    sc = spark.sparkContext
+    if zip_path.name in sc._python_includes:
+        return
     if not zip_path.exists():
         with zipfile.ZipFile(zip_path, "w") as zf:
             for py in sorted(pkg_dir.rglob("*.py")):
                 zf.write(py, f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
-    spark.sparkContext.addPyFile(str(zip_path))
+    sc.addPyFile(str(zip_path))

@@ -45,6 +45,22 @@ def test_minhash_and_jaccard(spark):
     assert 0.5 < jm[(1, 3)] < 1.0
 
 
+def test_ngram_jaccard_rejects_shingle_n_with_prebuilt_shingles(spark):
+    import pytest
+
+    from ner_extractor_spark.operators.dedup import word_shingles
+    docs = _docs(spark)
+    sh = docs.select("doc_id", F.explode(word_shingles(F.col("text")))
+                     .alias("shingle"))
+    pairs = spark.createDataFrame([(1, 3)], "a long, b long")
+    # the table was built with n=3; shingle_n=5 would be silently ignored
+    with pytest.raises(ValueError, match="shingle_n"):
+        ngram_jaccard(docs, pairs, shingle_n=5, shingles=sh)
+    jm = {(r["a"], r["b"]): r["jaccard"]
+          for r in ngram_jaccard(docs, pairs, shingles=sh).collect()}
+    assert 0.5 < jm[(1, 3)] < 1.0
+
+
 def test_simhash(spark):
     docs = _docs(spark)
     # at max_hamming=2 the unrelated doc 4 (true hamming 3 from doc 1 on
@@ -60,6 +76,20 @@ def test_simhash(spark):
     got3 = {(r["a"], r["b"]): r["hamming"]
             for r in simhash_dedup(docs, max_hamming=3).collect()}
     assert got3[(1, 4)] == 3
+
+
+def test_simhash_rejects_fingerprints_wider_than_a_long(spark):
+    """The packed fingerprint is one signed long: a 64th bit overflows
+    it (ARITHMETIC_OVERFLOW at job time under ANSI, a silent wrap and
+    wrong hamming distances without), so it must fail at plan time."""
+    import pytest
+    docs = _docs(spark)
+    for n_bits in (64, 65):
+        with pytest.raises(ValueError, match="n_bits"):
+            simhash_dedup(docs, n_bits=n_bits)
+    got = {(r["a"], r["b"]): r["hamming"]
+           for r in simhash_dedup(docs, n_bits=63).collect()}
+    assert got[(1, 5)] == 0 and got[(1, 2)] == 0
 
 
 def test_simhash_fingerprint_not_pushed_below_repartition(spark):

@@ -188,8 +188,8 @@ def test_approx_mode_swaps_the_percentile_aggregate(spark):
     scored = classify_docs(d, synthetic_weights(spark))
     for exact_df, approx_df in [
         (calibrate_thresholds(d), calibrate_thresholds(d, approx=True)),
-        (ppl_buckets_grouped(d, "lang", checkpoint=False),
-         ppl_buckets_grouped(d, "lang", checkpoint=False, approx=True)),
+        (ppl_buckets_grouped(d, "lang"),
+         ppl_buckets_grouped(d, "lang", approx=True)),
         (calibrate_classifier_threshold(scored),
          calibrate_classifier_threshold(scored, approx=True)),
     ]:
