@@ -1428,10 +1428,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             perceptron_scores, synthetic_weights, train_perceptron)
         from ner_extractor_spark.operators.web_verdict import \
             full_web_verdict
-        from concurrent.futures import ThreadPoolExecutor
-
         from ner_extractor_spark.operators.curation import \
             calibrated_curation
+        from ner_extractor_spark.session import run_concurrently
         d = _web_docs_with_urls(_docs(spark, sf))
         keep, _ = quality_filter(F.col("text"))
         lab = d.select("doc_id", keep.cast("int").alias("label"))
@@ -1439,11 +1438,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # chain are independent until the final verdict join —
         # run both driver chains concurrently instead of training
         # first and only then materializing the curation barriers
-        with ThreadPoolExecutor(2) as pool:
-            f_w = pool.submit(train_perceptron, d, lab,
-                              n_buckets=64, n_rounds=3)
-            f_cur = pool.submit(calibrated_curation, d)
-            w, cur = f_w.result(), f_cur.result()
+        w, cur = run_concurrently(
+            lambda: train_perceptron(d, lab, n_buckets=64, n_rounds=3),
+            lambda: calibrated_curation(d))
         gate = perceptron_scores(d, w, n_buckets=64).select(
             "doc_id", F.col("keep").alias("cls_keep"))
         return full_web_verdict(

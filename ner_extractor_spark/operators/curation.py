@@ -25,6 +25,7 @@ from ner_extractor_spark.functions.text import quality_filter
 from ner_extractor_spark.operators.dedup import (dup_ngram_fraction,
                                                  normalize_text)
 from ner_extractor_spark.operators.lm import trigram_logprob, trigram_model
+from ner_extractor_spark.session import run_concurrently
 
 
 def curation_scores(docs: DataFrame, *, id_col: str = "doc_id",
@@ -262,8 +263,8 @@ def calibrated_curation(docs: DataFrame, *, id_col: str = "doc_id",
     beyond-memory corpora persist it as a ``write_stage`` parquet,
     the exact_substr/winnow posture.)
 
-    The two chains run on two driver threads; a failing chain raises
-    only after the sibling chain's running jobs finish."""
+    The two chains run on two driver threads (``run_concurrently``);
+    a failing chain cancels the other chain's running jobs."""
     # TWO CONCURRENT DRIVER CHAINS:
     #
     #   chain A: trigram model ckpt -> LM scoring ckpt
@@ -274,7 +275,6 @@ def calibrated_curation(docs: DataFrame, *, id_col: str = "doc_id",
     # chain's barriers/stragglers back-fill with the other chain's
     # tasks.  Both chains are deterministic and independent, so the
     # result does not depend on how their jobs interleave.
-    from concurrent.futures import ThreadPoolExecutor
 
     def chain_lm():
         # trigram_logprob checkpoints the model itself
@@ -282,7 +282,7 @@ def calibrated_curation(docs: DataFrame, *, id_col: str = "doc_id",
                                id_col=id_col, text_col=text_col,
                                join_mode=lm_join).localCheckpoint()
 
-    def chain_dup(near):
+    def chain_dup():
         shingles = None
         if near is True:
             from .dedup import word_shingles
@@ -292,16 +292,12 @@ def calibrated_curation(docs: DataFrame, *, id_col: str = "doc_id",
                 .alias("shingle")).localCheckpoint()
         dup = dup_ngram_fraction(docs, id_col=id_col, text_col=text_col,
                                  shingles=shingles).localCheckpoint()
-        if near is True:
-            near = near_dup_keepers(docs, id_col=id_col,
-                                    text_col=text_col, shingles=shingles)
-        return dup, near
+        if near is not True:
+            return dup, near
+        return dup, near_dup_keepers(docs, id_col=id_col,
+                                     text_col=text_col, shingles=shingles)
 
-    with ThreadPoolExecutor(2) as pool:
-        f_lm = pool.submit(chain_lm)
-        f_dup = pool.submit(chain_dup, near)
-        lm = f_lm.result()
-        dup, near = f_dup.result()
+    lm, (dup, near) = run_concurrently(chain_lm, chain_dup)
     thr = calibrate_thresholds(scores=(lm, dup),
                                lm_quantile=lm_quantile,
                                dup_quantile=dup_quantile,

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import run_concurrently
+
 N_HASHES = 12
 BAND_SIZE = 2  # 6 bands of 2 -> s-curve threshold ~ (1/6)^(1/2) ~ 0.41
 
@@ -215,15 +217,29 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     ``shingles`` must be the distinct-per-doc (id_col, shingle) table
     (``word_shingles`` semantics)."""
     if shingles is None:
-        sh = docs.select(F.col(id_col).alias("id"),
-                         F.explode(word_shingles(F.col(text_col)))
-                         .alias("shingle"))
+        sh = _shingle_rows(docs, id_col, text_col)
     else:
         sh = shingles.select(F.col(id_col).alias("id"), "shingle")
-    sig = sh.groupBy("id").agg(*[
+    return _band_pairs(_bands_from_sig(_minhash_sig(sh, n_hashes),
+                                       n_hashes, band_size))
+
+
+def _shingle_rows(docs: DataFrame, id_col: str, text_col: str,
+                  n: int = 3) -> DataFrame:
+    """(id, shingle): one row per distinct word ``n``-gram of each doc."""
+    return docs.select(F.col(id_col).alias("id"),
+                       F.explode(word_shingles(F.col(text_col), n))
+                       .alias("shingle"))
+
+
+def _minhash_sig(sh: DataFrame, n_hashes: int) -> DataFrame:
+    """THE MinHash signature: (id, shingle) -> (id, h0..h{n-1}), h_k =
+    min(md5("k|" || shingle)), banded by ``_bands_from_sig`` for dedup
+    and ``link.lsh_candidates``.  Oracle mirrors: ``_minhash_bands_sql``
+    (dedup); the shn/sig CTEs of ``kg_nil_clusters``/``kg_link_embed``."""
+    return sh.groupBy("id").agg(*[
         F.min(F.md5(F.concat(F.lit(f"{k}|"), F.col("shingle"))))
         .alias(f"h{k}") for k in range(n_hashes)])
-    return _band_pairs(_bands_from_sig(sig, n_hashes, band_size))
 
 
 def ngram_jaccard(docs: DataFrame, pairs: DataFrame,
@@ -600,51 +616,52 @@ def blocking_stats(docs: DataFrame, id_col: str = "doc_id",
     blocking against its own metric.
 
     The candidate and truth tables are materialized on two driver
-    threads; a failing side raises only after the sibling side's
-    running jobs finish.
+    threads (``session.run_concurrently``); a failing side cancels the
+    other side's running jobs.
     """
     if not threshold > 0:
         # jaccard >= 0 holds for every pair, including the non-
         # overlapping ones the shingle-equijoin never enumerates —
         # the truth set would silently understate
         raise ValueError("threshold must be > 0")
-    sh = (docs.select(F.col(id_col),
-                      F.explode(word_shingles(F.col(text_col), shingle_n))
-                      .alias("shingle"))
-          .localCheckpoint())  # shared: LSH signature + sizes + both
-    #                            truth join sides
-    cand_lazy = minhash_lsh_pairs(docs, id_col=id_col, text_col=text_col,
-                                  n_hashes=n_hashes, band_size=band_size,
-                                  shingles=sh)
-    shk = sh.select(F.col(id_col).alias("id"), "shingle")
-    sizes = shk.groupBy("id").agg(F.count(F.lit(1)).alias("nsh"))
-    # any pair with jaccard > 0 shares >= 1 shingle, so the
-    # shingle-equijoin enumeration of the truth set is exact for any
-    # threshold > 0
-    inter = (shk.select(F.col("id").alias("a"), "shingle")
-             .join(shk.select(F.col("id").alias("b"), "shingle"),
+    # shared: LSH signature + sizes + both truth join sides
+    sh = _shingle_rows(docs, id_col, text_col, shingle_n).localCheckpoint()
+    cand = minhash_lsh_pairs(docs, id_col="id", n_hashes=n_hashes,
+                             band_size=band_size, shingles=sh)
+    # candidate and truth tables are INDEPENDENT given sh (each is
+    # consumed twice: count + caught join) — materialize them
+    # CONCURRENTLY (guide §2.6 overlap-independent-jobs) so the truth
+    # side's stragglers back-fill with candidate-side tasks
+    cand, truth = run_concurrently(
+        cand.localCheckpoint, _truth_pairs(sh, threshold).localCheckpoint)
+    return _blocking_row(docs, cand, truth)
+
+
+def _truth_pairs(sh: DataFrame, threshold: float) -> DataFrame:
+    """(a, b), a < b: the pairs of an (id, shingle) table whose Jaccard
+    is >= ``threshold``.  A pair with jaccard > 0 shares a shingle, so
+    the shingle-equijoin enumeration is exact for any threshold > 0."""
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("nsh"))
+    inter = (sh.select(F.col("id").alias("a"), "shingle")
+             .join(sh.select(F.col("id").alias("b"), "shingle"),
                    on="shingle")
              .filter(F.col("a") < F.col("b"))
              .groupBy("a", "b").agg(F.count(F.lit(1)).alias("ninter")))
-    truth_lazy = (inter
-                  .join(sizes.select(F.col("id").alias("a"),
-                                     F.col("nsh").alias("na")), on="a")
-                  .join(sizes.select(F.col("id").alias("b"),
-                                     F.col("nsh").alias("nb")), on="b")
-                  .filter(F.col("ninter")
-                          / (F.col("na") + F.col("nb") - F.col("ninter"))
-                          >= F.lit(threshold))
-                  .select("a", "b"))
-    # candidate and truth tables are INDEPENDENT given sh (each is
-    # consumed twice: count + caught join) — materialize them
-    # CONCURRENTLY (guide §2.6 overlap-independent-jobs; the
-    # calibrated_curation two-thread discipline) so the truth side's
-    # stragglers back-fill with candidate-side tasks
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(2) as pool:
-        f_cand = pool.submit(cand_lazy.localCheckpoint)
-        f_truth = pool.submit(truth_lazy.localCheckpoint)
-        cand, truth = f_cand.result(), f_truth.result()
+    return (inter
+            .join(sizes.select(F.col("id").alias("a"),
+                               F.col("nsh").alias("na")), on="a")
+            .join(sizes.select(F.col("id").alias("b"),
+                               F.col("nsh").alias("nb")), on="b")
+            .filter(F.col("ninter")
+                    / (F.col("na") + F.col("nb") - F.col("ninter"))
+                    >= F.lit(threshold))
+            .select("a", "b"))
+
+
+def _blocking_row(docs: DataFrame, cand: DataFrame,
+                  truth: DataFrame) -> DataFrame:
+    """The one-row blocking metrics of a candidate set against a truth
+    set: four 1-row counts crossJoined, then the three ratios."""
     nd = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     nc = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
     nt = truth.agg(F.count(F.lit(1)).alias("n_true_pairs"))
@@ -673,6 +690,9 @@ def _bands_from_sig(sig: DataFrame, n_hashes: int,
     each band's ``band_size`` minhashes sorted BY VALUE (the multiset
     key minhash_lsh_pairs uses — mirrored by the DuckDB oracle's
     ORDER BY h)."""
+    if n_hashes % band_size:
+        # the oracle's floor(k / band_size) would add a short last band
+        raise ValueError(f"band_size {band_size} must divide n_hashes")
     return sig.select("id", F.posexplode(F.array(*[
         F.concat_ws("", F.array_sort(F.array(
             *[F.col(f"h{b * band_size + j}") for j in range(band_size)])))
@@ -713,56 +733,15 @@ def blocking_curve(docs: DataFrame, id_col: str = "doc_id",
     for b in band_sizes:
         if n_hashes % b:
             raise ValueError(f"band_size {b} must divide n_hashes")
-    sh = (docs.select(F.col(id_col).alias("id"),
-                      F.explode(word_shingles(F.col(text_col), shingle_n))
-                      .alias("shingle"))
-          .localCheckpoint())
-    sig = (sh.groupBy("id").agg(*[
-        F.min(F.md5(F.concat(F.lit(f"{k}|"), F.col("shingle"))))
-        .alias(f"h{k}") for k in range(n_hashes)])
-        .localCheckpoint())
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("nsh"))
-    inter = (sh.select(F.col("id").alias("a"), "shingle")
-             .join(sh.select(F.col("id").alias("b"), "shingle"),
-                   on="shingle")
-             .filter(F.col("a") < F.col("b"))
-             .groupBy("a", "b").agg(F.count(F.lit(1)).alias("ninter")))
-    truth = (inter
-             .join(sizes.select(F.col("id").alias("a"),
-                                F.col("nsh").alias("na")), on="a")
-             .join(sizes.select(F.col("id").alias("b"),
-                                F.col("nsh").alias("nb")), on="b")
-             .filter(F.col("ninter")
-                     / (F.col("na") + F.col("nb") - F.col("ninter"))
-                     >= F.lit(threshold))
-             .select("a", "b")
-             .localCheckpoint())
-    nd = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    nt = truth.agg(F.count(F.lit(1)).alias("n_true_pairs"))
+    sh = _shingle_rows(docs, id_col, text_col, shingle_n).localCheckpoint()
+    sig = _minhash_sig(sh, n_hashes).localCheckpoint()
+    truth = _truth_pairs(sh, threshold).localCheckpoint()
     rows = None
     for b in band_sizes:
         cand = _band_pairs(_bands_from_sig(sig, n_hashes, b)) \
             .localCheckpoint()
-        nc = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-        cg = (truth.join(cand, on=["a", "b"])
-              .agg(F.count(F.lit(1)).alias("n_caught")))
-        all_pairs = F.greatest(
-            F.col("n_docs") * (F.col("n_docs") - 1) / 2, F.lit(1.0))
-        row = (nd.crossJoin(nc).crossJoin(nt).crossJoin(cg)
-               .select(F.lit(b).cast("int").alias("band_size"),
-                       F.lit(n_hashes // b).cast("int").alias("n_bands"),
-                       "n_docs", "n_candidates", "n_true_pairs",
-                       "n_caught",
-                       F.round(F.col("n_caught")
-                               / F.greatest(F.col("n_true_pairs"),
-                                            F.lit(1)), 6)
-                       .alias("pairs_completeness"),
-                       F.round(F.col("n_caught")
-                               / F.greatest(F.col("n_candidates"),
-                                            F.lit(1)), 6)
-                       .alias("pairs_quality"),
-                       F.round(F.lit(1.0) - F.col("n_candidates")
-                               / all_pairs, 6)
-                       .alias("reduction_ratio")))
+        row = _blocking_row(docs, cand, truth).select(
+            F.lit(b).cast("int").alias("band_size"),
+            F.lit(n_hashes // b).cast("int").alias("n_bands"), "*")
         rows = row if rows is None else rows.unionByName(row)
     return rows

@@ -8,10 +8,10 @@ Stages:
      ambiguity resolved deterministically (max prior, then min entity_id).
   3. residuals (left-anti vs step 2) go through MinHash-LSH over character
      3-gram shingles to find near-miss aliases (typos, case-garbled).
-     The MinHash here is the md5-band construction (deterministic, engine-
-     portable — the same signature is computable in ANSI SQL, which is how
-     the DuckDB oracle checks it; pyspark.ml.feature.MinHashLSH is an
-     alternative backend but its hash seeds are not portable).
+     The signature and band kernel is near-dup dedup's md5-band one,
+     ``dedup._minhash_sig``/``_bands_from_sig`` (deterministic, engine-
+     portable — the DuckDB oracle recomputes it in ANSI SQL;
+     pyspark.ml.feature.MinHashLSH's hash seeds are not portable).
   4. skew: the hot-surface problem (a handful of surfaces dominate web
      text — SURVEY §4.3.1).  ``salt_explode`` gives the generic pattern:
      add salt = pmod(xxhash64(url), K) on the big side and explode the
@@ -27,8 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-N_HASHES = 12   # minhash signature length
-BAND_SIZE = 2   # 6 bands of 2 — same OR-construction as operators/dedup
+from .dedup import BAND_SIZE, N_HASHES, _bands_from_sig, _minhash_sig
+
 SHINGLE = 3
 
 
@@ -159,26 +159,17 @@ def _shingles(col, n: int = SHINGLE):
     )
 
 
-def minhash_signature_from(sh_col, n_hashes: int = N_HASHES):
-    """Deterministic engine-portable minhash from a MATERIALIZED shingle
-    column: for seed k, the signature element is min(md5(k || shingle)).
-    Identical in any engine with md5.  (Materialize the shingle array
-    first — inlining the shingle expression re-evaluates it per hash.)"""
-    return F.array(*[
-        F.array_min(F.transform(sh_col, lambda s: F.md5(F.concat(F.lit(str(k) + "|"), s))))
-        for k in range(n_hashes)
-    ])
-
-
 def lsh_candidates(left: DataFrame, left_key: str,
                    right: DataFrame, right_key: str,
                    n_hashes: int = N_HASHES,
                    band_size: int = BAND_SIZE,
                    broadcast_right: bool = False) -> DataFrame:
     """Band-bucket join: pairs sharing any minhash band (bands of
-    ``band_size`` ≥ 2 minhashes, same construction as operators/dedup).
+    ``band_size`` ≥ 2 minhashes) of the keys' char-3-gram shingles,
+    signed and banded by ``dedup._minhash_sig``/``_bands_from_sig``.
 
-    Returns distinct (left_key, right_key) candidate pairs.  A band key
+    Returns distinct (left_key, right_key) candidate pairs (right_key
+    gets an ``_r`` suffix when the names are equal).  A band key
     concatenates ``band_size`` minhashes, so one popular shingle (the
     ``^th`` 3-gram family on web surfaces) cannot put a large fraction of
     all surfaces into one bucket — ALL hashes of the band must agree, not
@@ -192,35 +183,24 @@ def lsh_candidates(left: DataFrame, left_key: str,
     side fits a broadcast.
     """
     def bands(df, key):
-        base = df.select(F.col(key),
-                         _shingles(norm_surface(F.col(key))).alias("_sh"))
-        sig = base.select(
-            F.col(key),
-            F.posexplode(minhash_signature_from(F.col("_sh"), n_hashes))
-            .alias("k", "h"),
-        ).withColumn("band", (F.col("k") / band_size).cast("int"))
-        # multiset band key (sorted by value) — same construction and
-        # rationale as operators/dedup.minhash_lsh_pairs
-        return sig.groupBy(key, "band").agg(
-            F.concat_ws("", F.array_sort(F.collect_list("h"))).alias("bh"))
+        # the kernel works on its own column names; the caller's key
+        # names come back only in the final select
+        sh = df.select(key).distinct().toDF("id").select(
+            "id", F.explode(_shingles(norm_surface(F.col("id"))))
+            .alias("shingle"))
+        return _bands_from_sig(_minhash_sig(sh, n_hashes), n_hashes,
+                               band_size)
 
-    lb = bands(left.select(left_key).distinct(), left_key)
-    rb = bands(right.select(right_key).distinct(), right_key)
-    if left_key == right_key:
-        rb = rb.withColumnRenamed(right_key, right_key + "_r")
-        right_key = right_key + "_r"
+    lb = bands(left, left_key).withColumnRenamed("id", "_l")
+    rb = bands(right, right_key).withColumnRenamed("id", "_r")
     if broadcast_right:
         rb = F.broadcast(rb)
-    return (
-        lb.join(rb, on=["band", "bh"])
-        .select(left_key, right_key)
-        .distinct()
-    )
+    out_r = right_key + "_r" if left_key == right_key else right_key
+    return (lb.join(rb, on=["band", "bh"]).select("_l", "_r").distinct()
+            .select(F.col("_l").alias(left_key), F.col("_r").alias(out_r)))
 
 
-def nil_clusters(mentions: DataFrame, aliases: DataFrame,
-                 n_hashes: int = N_HASHES,
-                 band_size: int = BAND_SIZE) -> DataFrame:
+def nil_clusters(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     """NIL clustering — the standard KG-construction step AFTER linking
     fails: mentions whose surface matches no alias are grouped into
     provisional entities, so the KG gets one node per unknown entity

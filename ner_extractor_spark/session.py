@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 import zipfile
 from pathlib import Path
 
@@ -98,3 +99,46 @@ def _ship_package(spark: SparkSession) -> None:
             for py in sorted(pkg_dir.rglob("*.py")):
                 zf.write(py, f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
     sc.addPyFile(str(zip_path))
+
+
+def run_concurrently(*thunks):
+    """Run independent driver chains (zero-argument callables that
+    launch Spark jobs) on one thread each; return their results in order.
+
+    Each chain inherits the calling thread's local properties (job
+    tags, job group, scheduler pool) and adds its own job tag, so a
+    nested chain is cancelled with its parent.  The first chain to
+    raise cancels its siblings' jobs, and its error is re-raised once
+    they have stopped."""
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
+    from pyspark.util import inheritable_thread_target
+
+    spark = SparkSession.builder.getOrCreate()
+    sc = spark.sparkContext
+    tags = [f"chain-{uuid.uuid4().hex}" for _ in thunks]
+
+    def tagged(thunk, tag):
+        # job tags are thread-local: set them on the chain's own thread
+        sc.addJobTag(tag)
+        try:
+            return thunk()
+        finally:
+            sc.clearJobTags()
+
+    with ThreadPoolExecutor(len(thunks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(tagged),
+                               thunk, tag)
+                   for thunk, tag in zip(thunks, tags)]
+        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        failed = [f for f in futures if f in done and f.exception()]
+        if failed:
+            # a sibling between two jobs escapes one cancel and starts
+            # its next job, so cancel until every sibling has stopped
+            while pending:
+                for f, tag in zip(futures, tags):
+                    if not f.done():
+                        sc.cancelJobsWithTag(tag)
+                _, pending = wait(pending, timeout=0.1)
+            raise failed[0].exception()
+    return [f.result() for f in futures]

@@ -370,7 +370,8 @@ def test_minhash_agg_form_equals_hof_signature(spark):
     (minhash_sig_from) — same min over the same md5(k|shingle) set."""
     from pyspark.sql import functions as F
 
-    from ner_extractor_spark.operators.dedup import (minhash_sig_from,
+    from ner_extractor_spark.operators.dedup import (_minhash_sig,
+                                                     minhash_sig_from,
                                                      word_shingles)
 
     d = spark.createDataFrame(
@@ -381,12 +382,10 @@ def test_minhash_agg_form_equals_hof_signature(spark):
     hof = {r["doc_id"]: list(r["sig"]) for r in d.select(
         "doc_id", minhash_sig_from(word_shingles(F.col("text")), 12)
         .alias("sig")).collect()}
-    sh = d.select("doc_id", F.explode(word_shingles(F.col("text")))
-                  .alias("shingle"))
-    agg = {r["doc_id"]: [r[f"h{k}"] for k in range(12)]
-           for r in sh.groupBy("doc_id").agg(*[
-               F.min(F.md5(F.concat(F.lit(f"{k}|"), F.col("shingle"))))
-               .alias(f"h{k}") for k in range(12)]).collect()}
+    sh = d.select(F.col("doc_id").alias("id"),
+                  F.explode(word_shingles(F.col("text"))).alias("shingle"))
+    agg = {r["id"]: [r[f"h{k}"] for k in range(12)]
+           for r in _minhash_sig(sh, 12).collect()}
     assert hof == agg
 
 
@@ -416,6 +415,23 @@ def test_blocking_stats_rejects_nonpositive_threshold(spark):
     from ner_extractor_spark.operators.dedup import blocking_stats
     with pytest.raises(ValueError):
         blocking_stats(_docs(spark), threshold=0.0)
+
+
+def test_band_size_must_divide_n_hashes(spark):
+    """A short last band would not match the oracle's floor(k / b)
+    grouping, so every MinHash-LSH entry point refuses it."""
+    import pytest
+
+    from ner_extractor_spark.operators.dedup import (blocking_curve,
+                                                     minhash_lsh_pairs)
+    from ner_extractor_spark.operators.link import lsh_candidates
+    with pytest.raises(ValueError, match="must divide"):
+        minhash_lsh_pairs(_docs(spark), band_size=5)
+    s = spark.createDataFrame([("acme",)], "k string")
+    with pytest.raises(ValueError, match="must divide"):
+        lsh_candidates(s, "k", s, "k", band_size=5)
+    with pytest.raises(ValueError, match="must divide"):
+        blocking_curve(_docs(spark), band_sizes=(5,))
 
 
 def test_blocking_curve_monotone_and_consistent(spark):

@@ -114,6 +114,67 @@ def test_lsh_candidates_find_typo(spark):
     assert ("completely different", "acme corp") not in pairs
 
 
+# fixed surfaces for the exact-output pins: empty and one-letter
+# strings, one-letter typos, case/whitespace variants and a '^th'
+# hot-prefix family
+SURFACES = [
+    "", "a", "z", "globex", "globexx", "glbex", "globez", "Globex",
+    "acme corp", "acme corps", "acne corp", "  Acme   CORP ", "initech",
+    "initech inc", "inittech", "umbrella", "umbrela", "umbrella corp",
+    "new york", "new yrok", "newyork", "apple", "appel", "banana",
+    "bananas", "the", "thea", "then", "there", "therapy", "thermal",
+    "theory", "thorn", "thumb", "thx", "thing", "think", "throne",
+    "through", "thought",
+]
+
+
+def _reference_lsh(left, right, n_hashes=12, band_size=2):
+    """Pure-Python lsh_candidates: md5 minhash over ^...$-padded char
+    3-grams of the normalized key, bands keyed by their hashes sorted
+    by value and concatenated; a pair is a candidate iff a band agrees."""
+    import hashlib
+    import re
+
+    def bands(s):
+        t = re.sub(r"[ \t\n\x0b\f\r]+", " ", s.lower()).strip(" ")
+        p = f"^{t}$"
+        grams = {p[i:i + 3] for i in range(max(len(p) - 2, 1))}
+        sig = [min(hashlib.md5(f"{k}|{g}".encode()).hexdigest()
+                   for g in grams) for k in range(n_hashes)]
+        return ["".join(sorted(sig[b:b + band_size]))
+                for b in range(0, n_hashes, band_size)]
+
+    lb = {s: bands(s) for s in set(left)}
+    rb = {s: bands(s) for s in set(right)}
+    return {(a, b) for a, x in lb.items() for b, y in rb.items()
+            if any(u == v for u, v in zip(x, y))}
+
+
+def test_lsh_candidates_equal_python_reference(spark):
+    """The exact candidate set, not just one pair: a self-join and a
+    broadcast dictionary join against the pure-Python reference."""
+    df = spark.createDataFrame([(s,) for s in SURFACES], "alias_norm string")
+    got = {tuple(r) for r in
+           lsh_candidates(df, "alias_norm", df, "alias_norm").collect()}
+    assert got == _reference_lsh(SURFACES, SURFACES)
+    dictionary = SURFACES[::3]
+    right = spark.createDataFrame([(s,) for s in dictionary], "alias string")
+    got = {tuple(r) for r in lsh_candidates(df, "alias_norm", right, "alias",
+                                            broadcast_right=True).collect()}
+    assert got == _reference_lsh(SURFACES, dictionary)
+
+
+def test_lsh_candidates_any_key_name(spark):
+    """Key columns named like the kernel's own columns still work."""
+    want = _reference_lsh(SURFACES[:12], SURFACES[:12])
+    for key in ("band", "bh", "id", "shingle", "k", "h"):
+        df = spark.createDataFrame([(s,) for s in SURFACES[:12]],
+                                   f"{key} string")
+        cand = lsh_candidates(df, key, df, key)
+        assert cand.columns == [key, key + "_r"]
+        assert {tuple(r) for r in cand.collect()} == want
+
+
 def test_norm_surface(spark):
     df = spark.createDataFrame([("  Acme   CORP ",)], "s string")
     assert df.select(norm_surface(F.col("s")).alias("n")).collect()[0]["n"] == "acme corp"

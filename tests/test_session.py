@@ -1,8 +1,12 @@
-"""Session factory: package shipping is idempotent per SparkContext."""
+"""Session factory: package shipping is idempotent per SparkContext;
+concurrent driver chains cancel each other on failure."""
 
 import sys
+import time
 
-from ner_extractor_spark.session import _ship_package
+import pytest
+
+from ner_extractor_spark.session import _ship_package, run_concurrently
 
 
 def test_ship_package_twice_is_a_noop(spark):
@@ -16,3 +20,47 @@ def test_ship_package_twice_is_a_noop(spark):
     assert sys.path == path
     assert any(name.startswith("ner_extractor_spark-")
                for name in includes)
+
+
+@pytest.mark.parametrize("nested", [False, True])
+def test_failing_chain_cancels_its_sibling(spark, nested):
+    """One chain raises while the other runs a job that would take a
+    minute: the call raises the first error within seconds and the
+    sibling's job ends cancelled, also when that job runs in a chain
+    nested inside the sibling."""
+    from pyspark.sql import functions as F
+
+    @F.udf("long")
+    def slow(x):
+        import time
+        time.sleep(60)
+        return x
+
+    sc = spark.sparkContext
+    sibling_errors, failed_at = [], []
+
+    def slow_chain():
+        try:
+            return spark.range(1, numPartitions=1).select(slow("id")).collect()
+        except Exception as e:
+            sibling_errors.append(e)
+            raise
+
+    def failing_chain():
+        deadline = time.monotonic() + 30
+        while not sc.statusTracker().getActiveJobsIds():
+            assert time.monotonic() < deadline, "sibling job never started"
+            time.sleep(0.1)
+        failed_at.append(time.monotonic())
+        raise RuntimeError("chain failed")
+
+    def nested_chain():
+        return run_concurrently(slow_chain, lambda: None)
+
+    with pytest.raises(RuntimeError, match="chain failed"):
+        run_concurrently(nested_chain if nested else slow_chain,
+                         failing_chain)
+    assert time.monotonic() - failed_at[0] < 15
+    assert len(sibling_errors) == 1
+    assert "cancel" in str(sibling_errors[0]).lower()
+    assert not sc.getJobTags()

@@ -127,22 +127,20 @@ def test_lsh_hot_shingle_bucket_share_bounded(spark):
     surfaces into one bucket (VERDICT r01 #6)."""
     import hashlib
 
-    from ner_extractor_spark.operators.link import (BAND_SIZE, _shingles,
+    from ner_extractor_spark.operators.dedup import (_bands_from_sig,
+                                                     _minhash_sig)
+    from ner_extractor_spark.operators.link import (BAND_SIZE, N_HASHES,
+                                                    _shingles,
                                                     lsh_candidates,
-                                                    minhash_signature_from,
                                                     norm_surface)
     n = 300
     df = spark.createDataFrame(
         [("th" + hashlib.md5(str(i).encode()).hexdigest()[:10],)
          for i in range(n)], "alias_norm string")
-    base = df.select("alias_norm",
-                     _shingles(norm_surface(F.col("alias_norm"))).alias("sh"))
-    sig = (base.select("alias_norm",
-                       F.posexplode(minhash_signature_from(F.col("sh")))
-                       .alias("k", "h"))
-           .withColumn("band", (F.col("k") / BAND_SIZE).cast("int")))
-    bands = sig.groupBy("alias_norm", "band").agg(
-        F.concat_ws("", F.array_sort(F.collect_list("h"))).alias("bh"))
+    sh = df.select(F.col("alias_norm").alias("id"),
+                   F.explode(_shingles(norm_surface(F.col("alias_norm"))))
+                   .alias("shingle"))
+    bands = _bands_from_sig(_minhash_sig(sh, N_HASHES), N_HASHES, BAND_SIZE)
     max_bucket = (bands.groupBy("band", "bh").count()
                   .agg(F.max("count")).first()[0])
     assert max_bucket / n <= 0.05, max_bucket
