@@ -5,7 +5,7 @@ Span decoding reproduces the public ``seqeval.metrics.sequence_labeling
 .get_entities`` IOB2-lenient semantics exactly (the reference's scoring
 authority — used at reference ``DistilBERT-CRF/src/metrics.py:62-69`` and
 ``src/augmentation.py:154-160``).  seqeval is not installed in this
-environment, so the chunk-boundary rules are implemented fresh from the
+environment, so the chunk-boundary rules are implemented anew from the
 published algorithm; tests/test_bio_spans.py pins the adversarial edge
 cases (orphan I-, type switches, span at sequence end, ...).
 
@@ -138,16 +138,3 @@ def primary_label(ner_tags: Sequence[str]) -> str:
         if tag != "O":
             return tag.split("-", maxsplit=1)[-1]
     return "O"
-
-
-def spans_with_surface(
-    tokens: Sequence[str], tags: Sequence[str]
-) -> List[Tuple[int, int, str, str]]:
-    """(start, end_inclusive, surface, label) for each decoded span.
-
-    surface = ``' '.join(tokens[start:end+1])`` (SURVEY F7).
-    """
-    out = []
-    for label, start, end in get_entities(tags):
-        out.append((start, end, " ".join(tokens[start : end + 1]), label))
-    return out

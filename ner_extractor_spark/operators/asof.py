@@ -78,10 +78,10 @@ def asof_join(left: DataFrame, right: DataFrame,
 
     matched = F.col("_m")
     if tolerance_s is not None:
-        fresh = (F.unix_micros(F.col("_ts").cast("timestamp"))
-                 - F.unix_micros(F.col(f"_m.{right_ts}").cast("timestamp"))
-                 <= tolerance_s * 1_000_000)
-        matched = F.when(fresh, F.col("_m"))
+        in_tol = (F.unix_micros(F.col("_ts").cast("timestamp"))
+                  - F.unix_micros(F.col(f"_m.{right_ts}").cast("timestamp"))
+                  <= tolerance_s * 1_000_000)
+        matched = F.when(in_tol, F.col("_m"))
     return (u.filter(F.col("_lft") == 1)
             .select(*[F.col(f"_l.{c}").alias(c) for c in lcols],
                     *[matched.getField(c).alias(right_prefix + c)

@@ -6,7 +6,7 @@ Semantics reproduced:
   * per sentence, each span is independently considered for replacement
     (probability ``replace_prob``), capped at ``max_replacements``;
     a replacement identical to the original is skipped;
-  * replacement splices new tokens with POS='NN', chunk='O', fresh BIO
+  * replacement splices new tokens with POS='NN', chunk='O', new BIO
     tags (G2); sentences with no replacement are dropped;
   * augmented rows carry ``loss_weight`` (G3, default 0.5).
 

@@ -67,7 +67,7 @@ def adjacent_pair_counts(words: DataFrame) -> DataFrame:
 def apply_merge(syms_col, left: str, right: str):
     """Classic greedy merge of (left, right) -> left+right, as a pure
     fold: scan symbols once, merging when the accumulated tail is
-    ``left`` and the incoming symbol is ``right`` (a fresh merge result
+    ``left`` and the incoming symbol is ``right`` (a new merge result
     never re-matches ``left`` because left+right != left)."""
     return F.aggregate(
         syms_col, F.array().cast("array<string>"),
@@ -88,7 +88,7 @@ def train_bpe(docs: DataFrame, n_merges: int = 8,
     final round's, which is discarded.  Fusing several rounds between
     barriers (the ``bpe_encode`` chunking) measured NEUTRAL warm in
     isolation but SLOWER in-suite (each argmax job then carries a
-    deeper fold expression — a fresh whole-stage-codegen compile per
+    deeper fold expression — a new whole-stage-codegen compile per
     round per query; the saved barrier jobs did not pay for the
     compile storms)."""
     spark = docs.sparkSession

@@ -146,9 +146,3 @@ def decode_image(payload: bytes):  # pragma: no cover - explicit stub
         "image decode needs PIL/opencv; wire it into extract_features' / "
         "resize_images' batch loops — the Spark plumbing (schema/batching) "
         "is already real")
-
-
-def sample_video_frames(payload: bytes, every_ms: int = 1000):  # pragma: no cover
-    """Real frame decoding (ffmpeg) — unavailable in this container;
-    the distributed fan-out lives in ``sample_frames``."""
-    raise NotImplementedError("frame decoding needs ffmpeg/av")

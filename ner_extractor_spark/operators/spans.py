@@ -1,17 +1,12 @@
 """BIO tags -> entity mentions (SURVEY F1/§7.1 M2).
 
-Two implementations with identical semantics (seqeval-lenient IOB2,
-pinned against functions/bio.get_entities in tests/test_bio_spans.py):
-
-  * ``span_decode_expr`` — the DEFAULT and the scale path: a pure Spark
-    SQL higher-order-function expression over the tag array.  Decoding
-    happens inside whole-stage codegen with ZERO shuffle and zero Python;
-    at 100 TB this is the difference between a map-only stage and an
-    explode+window shuffle of 10^13 token rows.
-
-  * ``decode_spans_pandas`` — Arrow-batched pandas UDF wrapping the
-    pure-Python authority (functions/bio.py); kept as the parity oracle
-    and for engines where HOF support is missing.
+``span_decode_expr`` is a pure Spark SQL higher-order-function
+expression over the tag array: decoding happens inside whole-stage
+codegen with ZERO shuffle and zero Python; at 100 TB this is the
+difference between a map-only stage and an explode+window shuffle of
+10^13 token rows.  Its semantics (seqeval-lenient IOB2) are pinned
+against the pure-Python reference ``functions/bio.get_entities`` in
+tests/test_bio_spans.py.
 
 Mention rows carry INCLUSIVE end (seqeval convention, reference
 ``src/augmentation.py:154-160``); surface = ' '.join(tokens[start:end+1])
@@ -20,9 +15,6 @@ computed with built-in slice/concat_ws (SURVEY F7).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 # Boundary predicate (seqeval-lenient, B/I/O tag alphabet):
@@ -84,24 +76,3 @@ def extract_mentions(tagged: DataFrame, tags_col: str = "pred_tags") -> DataFram
             F.col("m.label").alias("label"),
         )
     )
-
-
-def decode_spans_pandas(tagged: DataFrame, tags_col: str = "pred_tags") -> DataFrame:
-    """Parity-oracle variant: same output via the pure-Python decoder."""
-    from ..functions.bio import get_entities
-    from ..schemas import MENTIONS
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, sid, toks, tags in zip(
-                pdf["url"], pdf["sent_id"], pdf["tokens"], pdf[tags_col]
-            ):
-                toks = list(toks)
-                for label, start, end in get_entities(list(tags)):
-                    rows.append((url, int(sid), start, end,
-                                 " ".join(toks[start:end + 1]), label))
-            yield pd.DataFrame(rows, columns=[f.name for f in MENTIONS.fields])
-
-    return tagged.select("url", "sent_id", "tokens", tags_col).mapInPandas(
-        fn, schema=MENTIONS)

@@ -1,13 +1,25 @@
-"""Stage checkpoint manifest — the resume/idempotence kernel (SURVEY §4.1
-"grid pickle" row, §4.3.4; north rule: resumable from checkpoint).
+"""Stage checkpoints: every pipeline stage is a table, a lineage file and
+a manifest entry, written in that order (SURVEY §4.1 "grid pickle" row,
+§4.3.4; north rule: resumable from checkpoint).
 
-Semantics = the reference's ``visited``-set resume idiom (BiLSTM grid
-search `grid_progress.pkl`): every stage writes its output table, then
-records (stage, run marker) in a manifest; a re-run SKIPS any stage whose
-manifest entry + output exist.  Made transactional here by writing the
-manifest entry only after the table write commits, and by writing tables
-atomically (Spark's _temporary -> rename protocol; Iceberg snapshots in
-production — same contract, table-commit-then-manifest).
+``write_stage`` is one write:
+
+  1. the stage table, through Spark's ``_temporary`` -> rename commit
+     (Iceberg snapshots in production: same table-commit-then-manifest
+     contract);
+  2. the stage's lineage, ``_lineage/<stage>.parquet``: one row per
+     committed part file with its exact row count, read on the driver
+     from the parquet footers just written.  No Spark job and no
+     re-read of the table.  ``partition_id`` is the file's index in
+     sorted path order.  The file is written under a hidden name and
+     renamed into place, so a rewritten stage REPLACES its lineage and
+     a resumed run counts every stage once;
+  3. the manifest entry ``(stage, run_id)``.
+
+A re-run SKIPS any stage whose manifest entry and table exist (the
+reference's ``visited``-set resume idiom, BiLSTM grid search
+``grid_progress.pkl``).  A crash anywhere before step 3 leaves the stage
+unmarked, so the resume rewrites the table and its lineage.
 
 Storage: partitioned parquet under a base dir (this sandbox has no
 Iceberg runtime jars; the writer keys off ``format`` so an Iceberg
@@ -21,7 +33,12 @@ import os
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+
+LINEAGE = pa.schema([("stage", pa.string()), ("partition_id", pa.int32()),
+                     ("row_count", pa.int64()), ("run_id", pa.string())])
 
 
 class StageManifest:
@@ -43,15 +60,11 @@ class StageManifest:
     def path(self, stage: str) -> str:
         return str(self.base / stage)
 
-    def mark(self, stage: str, fresh: bool = False, **meta) -> None:
-        """``fresh=True`` (a new stage commit) REPLACES the entry so no
-        stale metadata (e.g. an old ``compacted`` flag) survives a
-        re-write; the default MERGES, so a later mark (compaction) keeps
-        the run_id recorded at the commit."""
+    def mark(self, stage: str, **meta) -> None:
+        """Record a stage commit; the new entry replaces any old one."""
         m = self._load()
-        prev = {} if fresh else m["stages"].get(stage, {})
-        m["stages"][stage] = {**prev, "path": self.path(stage),
-                              "ts": time.time(), **meta}
+        m["stages"][stage] = {"path": self.path(stage), "ts": time.time(),
+                              **meta}
         tmp = self.manifest_path.with_suffix(".tmp")
         tmp.write_text(json.dumps(m, indent=2))
         os.replace(tmp, self.manifest_path)
@@ -60,132 +73,46 @@ class StageManifest:
 def write_stage(manifest: StageManifest, stage: str, df: DataFrame,
                 partition_by: list[str] | None = None,
                 run_id: str = "run0") -> DataFrame:
-    """Write a stage table + per-partition lineage rows; skip if already
-    done (idempotent resume).  Returns the (re-read) stage DataFrame so
-    downstream stages read the materialized table — every table IS the
-    checkpoint (SURVEY §7.0)."""
+    """Write a stage table + its lineage file, then mark the manifest;
+    skip if already done (idempotent resume).  Returns the (re-read)
+    stage DataFrame so downstream stages read the materialized table —
+    every table IS the checkpoint (SURVEY §7.0)."""
     spark = df.sparkSession
     out = manifest.path(stage)
-    # repair any compaction-crash leftovers BEFORE the resume check: a
-    # stranded _retired_* partition is hidden from parquet readers, so
-    # an unrecovered resume would silently read a partial table
-    recover_stage(manifest, stage)
+    if not manifest.done(stage):
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(out)
+        _write_lineage(manifest.base / "_lineage", stage, Path(out), run_id)
+        manifest.mark(stage, run_id=run_id)
     # read-backs carry the writer's schema explicitly: an EMPTY stage
     # (e.g. a verdict that dropped every document) writes a directory
     # with no part files, where schema inference fails — the stage
     # table must still exist and read back as 0 rows, not error
-    if manifest.done(stage):
-        return spark.read.schema(df.schema).parquet(out)
+    return spark.read.schema(df.schema).parquet(out)
 
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(out)
 
-    persisted = spark.read.schema(df.schema).parquet(out)
-    lineage = (
-        persisted.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("row_count"))
-        .select(F.lit(stage).alias("stage"), "partition_id", "row_count",
-                F.lit(run_id).alias("run_id"))
-    )
-    lineage.write.mode("append").parquet(str(manifest.base / "_lineage"))
-    manifest.mark(stage, fresh=True, run_id=run_id)
-    return persisted
+def _write_lineage(lineage_dir: Path, stage: str, table: Path,
+                   run_id: str) -> None:
+    """``_lineage/<stage>.parquet`` from the footers of ``table``'s
+    committed part files (hidden ``_``/``.`` paths are not data)."""
+    files = sorted(
+        p for p in table.rglob("*") if p.is_file()
+        and not any(c.startswith(("_", "."))
+                    for c in p.relative_to(table).parts))
+    counts = [pq.read_metadata(p).num_rows for p in files]
+    rows = pa.table({"stage": [stage] * len(files),
+                     "partition_id": range(len(files)),
+                     "row_count": counts,
+                     "run_id": [run_id] * len(files)}, schema=LINEAGE)
+    lineage_dir.mkdir(exist_ok=True)
+    tmp = lineage_dir / f".{stage}.parquet.tmp"
+    # no embedded Arrow schema copy: the parquet schema already holds
+    # all of it, and the copy is about a quarter of the file's bytes
+    pq.write_table(rows, tmp, store_schema=False)
+    os.replace(tmp, lineage_dir / f"{stage}.parquet")
 
 
 def read_lineage(spark: SparkSession, base_dir: str) -> DataFrame:
     return spark.read.parquet(str(Path(base_dir) / "_lineage"))
-
-
-def recover_stage(manifest: StageManifest, stage: str) -> None:
-    """Repair a stage directory after a compaction crash: every
-    ``_retired_X`` / ``_compacting_X`` leftover is resolved so ``X``
-    exists again and no hidden dirs remain.  Idempotent; see
-    ``compact_stage`` for the rename protocol that creates these."""
-    import shutil as _sh
-
-    def resolve(live: Path, aside: Path, ret: Path) -> None:
-        if not live.exists():
-            if aside.exists():               # aside write had completed:
-                os.replace(aside, live)      # promote the compacted copy
-            elif ret.exists():
-                os.replace(ret, live)        # restore the original
-        if aside.exists() and live.exists():
-            _sh.rmtree(aside)                # pre-rename crash leftover
-        if ret.exists() and live.exists():
-            _sh.rmtree(ret)                  # completed-swap leftover
-
-    base = Path(manifest.path(stage))
-    # whole-stage swap leftovers live NEXT TO the stage dir, scoped to
-    # this stage's name (never touch sibling stages); resolving them may
-    # be what brings `base` back into existence
-    resolve(base, base.parent / ("_compacting_" + base.name),
-            base.parent / ("_retired_" + base.name))
-    if base.exists():
-        names = {p.name[len("_retired_"):] for p in base.glob("_retired_*")}
-        names |= {p.name[len("_compacting_"):]
-                  for p in base.glob("_compacting_*")}
-        for n in names:
-            resolve(base / n, base / ("_compacting_" + n),
-                    base / ("_retired_" + n))
-
-
-def compact_stage(spark: SparkSession, manifest: StageManifest, stage: str,
-                  target_bytes: int = 128 * 1024 * 1024) -> int:
-    """Small-file compaction for a completed stage (the Iceberg
-    ``rewrite_data_files`` analog): rewrite the stage table at
-    ceil(on-disk-bytes / target_bytes) partitions, swap atomically
-    (write aside, rename old out, rename new in), re-mark the manifest.
-
-    A long-running resumable pipeline accretes small files — every
-    micro-batch / retry / AQE-coalesced reducer adds some; at 100 TB the
-    scan-task count (and the NameNode/manifest pressure) is set by file
-    count, not data size, so periodic compaction is part of the table
-    contract, not an optimization.  Returns the new file count.
-
-    Hash-partitioned stage dirs (hive-style ``key=value`` subdirs) keep
-    their partitioning: compaction then runs per partition directory.
-
-    Crash posture: the aside/retired directories use ``_``-prefixed
-    names, which every Spark/Hadoop reader treats as hidden — a crash
-    mid-compaction never pollutes partition discovery.
-    ``recover_stage`` runs first on every attempt and repairs each
-    possible crash window: a complete ``_compacting_*`` with its live
-    dir missing is promoted; a ``_retired_*`` with its live dir missing
-    is restored; completed-swap leftovers are deleted.  Run
-    ``recover_stage`` after any unclean shutdown before reading the
-    stage (a truly atomic multi-directory swap is what Iceberg's
-    snapshot commit provides; this is the parquet-dir approximation).
-    """
-    import math
-    import shutil
-
-    out = Path(manifest.path(stage))
-    # recovery FIRST: a crash between the whole-stage renames leaves the
-    # live dir missing, which done() would misread as "not complete"
-    recover_stage(manifest, stage)
-    if not manifest.done(stage):
-        raise ValueError(f"stage {stage!r} is not complete; nothing to compact")
-
-    part_dirs = [p for p in out.iterdir()
-                 if p.is_dir() and "=" in p.name and not p.name.startswith("_")]
-    targets = part_dirs or [out]
-    total_new = 0
-    for tdir in targets:
-        aside = tdir.parent / ("_compacting_" + tdir.name)
-        old = tdir.parent / ("_retired_" + tdir.name)
-        files = list(tdir.glob("*.parquet"))
-        nbytes = sum(f.stat().st_size for f in files)
-        n = max(1, math.ceil(nbytes / target_bytes))
-        if n >= len(files):
-            total_new += len(files)
-            continue
-        df = spark.read.parquet(str(tdir))
-        df.repartition(n).write.mode("overwrite").parquet(str(aside))
-        os.replace(tdir, old)
-        os.replace(aside, tdir)
-        shutil.rmtree(old)
-        total_new += len(list(tdir.glob("*.parquet")))
-    manifest.mark(stage, compacted=True)
-    return total_new

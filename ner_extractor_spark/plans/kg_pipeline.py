@@ -129,24 +129,19 @@ def run_kg_pipeline(
         )
         resid_linked = resid_entities.groupBy("alias_norm").agg(
             F.min("entity_id").alias("entity_id"))
-    m_norm = mentions.withColumn("alias_norm", norm_surface(F.col("surface")))
+    # one residual pass: every mention without an exact alias takes its
+    # residual surface's entity, else a surface-derived id (totality)
     resid_mentions = (
-        m_norm.join(F.broadcast(aliases.select("alias_norm")), "alias_norm", "left_anti")
-        .join(F.broadcast(resid_linked), on="alias_norm", how="inner")
-        .withColumn("prior", F.lit(0.0))
-        .withColumn("entity_type", F.col("label"))
-    )
-    linked_all = linked.select(*resid_mentions.columns).unionByName(resid_mentions)
-    # totality: anything still unmatched gets a surface-derived id
-    still = (
-        m_norm.join(linked_all.select("url", "sent_id", "start").distinct(),
-                    on=["url", "sent_id", "start"], how="left_anti")
-        .withColumn("entity_id", F.concat(F.lit("S-"), F.md5(F.col("alias_norm"))))
+        unlinked(mentions, aliases)
+        .join(F.broadcast(resid_linked), on="alias_norm", how="left")
+        .withColumn("entity_id", F.coalesce(
+            "entity_id", F.concat(F.lit("S-"), F.md5(F.col("alias_norm")))))
         .withColumn("prior", F.lit(0.0))
         .withColumn("entity_type", F.col("label"))
     )
     linked_total = write_stage(
-        man, "linked", linked_all.unionByName(still.select(*linked_all.columns)),
+        man, "linked",
+        linked.select(*resid_mentions.columns).unionByName(resid_mentions),
         run_id=run_id)
 
     # --- canonicalization ------------------------------------------------

@@ -129,50 +129,6 @@ def write_conll_file(sentences: Iterable[Sentence], path: Union[str, Path]) -> P
     return p
 
 
-def write_conll_spark(df, path: Union[str, Path],
-                      order_cols: Sequence[str] = ("file", "doc_id", "sent_id"),
-                      ) -> Path:
-    """Distributed byte-parity CoNLL sink (SURVEY S5, VERDICT r01 #4):
-    serialize each sentence's block with pure column expressions
-    (``concat_ws`` over the four annotation arrays) and ``write.text`` —
-    no driver ``collect()``.  Byte-identical to ``serialize_conll``.
-
-    The single output file is produced by repartition(1) +
-    sortWithinPartitions (total order, one writer task) — that is the
-    byte-parity *file* contract, used for fixture-sized corpora; at scale
-    the same block expression writes sharded text partitioned by doc
-    ranges and the parity invariant is per-sentence-block, not per-file.
-    """
-    from pyspark.sql import functions as F
-
-    p = Path(path).expanduser().resolve()
-    p.parent.mkdir(parents=True, exist_ok=True)
-    tmp = str(p) + "._spark_tmp"
-
-    toks = F.col("tokens")
-    lines = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - 1),
-        lambda i: F.concat_ws(" ", F.get(toks, i), F.get("pos_tags", i),
-                              F.get("chunk_tags", i), F.get("ner_tags", i)))
-    # block = lines joined by \n, + the newline after the last line; the
-    # text writer's own lineSep supplies the blank separator line
-    block = F.concat(F.concat_ws("\n", lines), F.lit("\n"))
-
-    order = [c for c in order_cols if c in df.columns]
-    (df.filter(F.size(toks) > 0)
-       .select(block.alias("value"), *order)
-       .repartition(1)
-       .sortWithinPartitions(*order)
-       .select("value")
-       .write.mode("overwrite").text(tmp))
-
-    import shutil
-    part = next(Path(tmp).glob("part-*"))
-    shutil.move(str(part), p)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return p
-
-
 # ---------------------------------------------------------------------------
 # Distributed Spark reader (declarative sentence assembly)
 # ---------------------------------------------------------------------------

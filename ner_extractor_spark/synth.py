@@ -156,14 +156,6 @@ def pages_rows(docs: List[PageDoc]):
     return [(d.url, d.warc_ts, d.html(), d.text(), d.lang) for d in docs]
 
 
-def gold_sentence_rows(docs: List[PageDoc]):
-    rows = []
-    for d in docs:
-        for sid, (toks, pos, chunk, ner) in enumerate(d.sentences):
-            rows.append((d.url, sid, toks, pos, chunk, ner))
-    return rows
-
-
 def gold_mention_rows(docs: List[PageDoc]):
     rows = []
     for d in docs:

@@ -1,10 +1,8 @@
-"""T-skew (SURVEY §5.2) + bucketed co-located joins:
-- salted join result == plain join result on a hot-key dataset;
-- joining two bucketed tables adds no Exchange."""
+"""T-skew (SURVEY §5.2): salted join result == plain join result on a
+hot-key dataset; skew profiles and LSH bucket-share bounds."""
 
 from pyspark.sql import functions as F
 
-from ner_extractor_spark.operators.bucketing import read_table, write_bucketed
 from ner_extractor_spark.operators.link import salt_explode
 
 
@@ -148,27 +146,6 @@ def test_lsh_hot_shingle_bucket_share_bounded(spark):
     cand = lsh_candidates(df, "alias_norm", df, "alias_norm")
     n_pairs = cand.filter("alias_norm != alias_norm_r").count()
     assert n_pairs < 0.01 * n * (n - 1), n_pairs
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = spark.range(0, 1000).select(
-            F.col("id"), F.concat(F.lit("u"), F.col("id")).alias("url"))
-        b = spark.range(0, 1000, 2).select(
-            F.col("id"), F.concat(F.lit("u"), F.col("id")).alias("url"),
-            F.lit(1).alias("x"))
-        write_bucketed(a, "bkt_a", "url", n_buckets=8)
-        write_bucketed(b, "bkt_b", "url", n_buckets=8)
-        j = read_table(spark, "bkt_a").join(read_table(spark, "bkt_b"), "url")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert j.count() == 500
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
 def test_key_skew_profile_known_distribution(spark):
