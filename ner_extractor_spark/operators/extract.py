@@ -29,6 +29,11 @@ def extract_sentences(pages: DataFrame, lang: str | None = "en",
       the binary out of the scan (SURVEY §4.2).
     * sent_id is the 0-based line index per url (SURVEY W2) — assigned by
       posexplode, NOT a window, so there is no shuffle here at all.
+    * ``sent_text`` is exactly ``concat_ws(" ", tokens)``, leading,
+      trailing and doubled spaces included (pinned in
+      tests/test_extract.py).  The KG ``sentences`` stage therefore
+      stores ``tokens`` only and rebuilds ``sent_text`` on its read-back
+      (``plans/kg_pipeline.py``).
     """
     df = pages
     if lang is not None:

@@ -21,9 +21,16 @@ reference's ``visited``-set resume idiom, BiLSTM grid search
 ``grid_progress.pkl``).  A crash anywhere before step 3 leaves the stage
 unmarked, so the resume rewrites the table and its lineage.
 
-Storage: partitioned parquet under a base dir (this sandbox has no
-Iceberg runtime jars; the writer keys off ``format`` so an Iceberg
-catalog slot-in is a config change, not a code change).
+Storage: partitioned parquet under a base dir, every stage table and
+lineage file compressed with ``CODEC`` (zstd at its default level: a
+quarter smaller than Snappy on the KG stages).  A pipeline stores no
+column that its read-back can derive from another stored column: the
+KG ``sentences`` stage stores ``tokens`` and rebuilds
+``sent_text = concat_ws(" ", tokens)`` on read, and ``linked`` rebuilds
+``alias_norm = norm_surface(surface)`` (``plans/kg_pipeline.py``).  No
+downstream stage reads either column, so column pruning removes both
+derivations from its plan.  The manifest stores each stage's path
+relative to its base dir, so a moved work dir still resumes.
 """
 
 from __future__ import annotations
@@ -37,6 +44,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
+CODEC = "zstd"
 LINEAGE = pa.schema([("stage", pa.string()), ("partition_id", pa.int32()),
                      ("row_count", pa.int64()), ("run_id", pa.string())])
 
@@ -54,8 +62,10 @@ class StageManifest:
 
     def done(self, stage: str) -> bool:
         m = self._load()
-        entry = m["stages"].get(stage)
-        return bool(entry) and Path(entry["path"]).exists()
+        # the stored path is not consulted: manifests written before it
+        # was made relative hold absolute paths, which a moved work dir
+        # no longer matches
+        return stage in m["stages"] and Path(self.path(stage)).exists()
 
     def path(self, stage: str) -> str:
         return str(self.base / stage)
@@ -63,8 +73,7 @@ class StageManifest:
     def mark(self, stage: str, **meta) -> None:
         """Record a stage commit; the new entry replaces any old one."""
         m = self._load()
-        m["stages"][stage] = {"path": self.path(stage), "ts": time.time(),
-                              **meta}
+        m["stages"][stage] = {"path": stage, "ts": time.time(), **meta}
         tmp = self.manifest_path.with_suffix(".tmp")
         tmp.write_text(json.dumps(m, indent=2))
         os.replace(tmp, self.manifest_path)
@@ -80,7 +89,7 @@ def write_stage(manifest: StageManifest, stage: str, df: DataFrame,
     spark = df.sparkSession
     out = manifest.path(stage)
     if not manifest.done(stage):
-        w = df.write.mode("overwrite")
+        w = df.write.mode("overwrite").option("compression", CODEC)
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(out)
@@ -110,7 +119,7 @@ def _write_lineage(lineage_dir: Path, stage: str, table: Path,
     tmp = lineage_dir / f".{stage}.parquet.tmp"
     # no embedded Arrow schema copy: the parquet schema already holds
     # all of it, and the copy is about a quarter of the file's bytes
-    pq.write_table(rows, tmp, store_schema=False)
+    pq.write_table(rows, tmp, compression=CODEC, store_schema=False)
     os.replace(tmp, lineage_dir / f"{stage}.parquet")
 
 

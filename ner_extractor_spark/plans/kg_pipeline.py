@@ -59,10 +59,15 @@ def run_kg_pipeline(
     inputs where text is null."""
     man = StageManifest(work_dir)
 
+    # stored columns only: sent_text is concat_ws(" ", tokens) (the
+    # byte-parity invariant of operators/extract.py), rebuilt on the
+    # read-back.  array_join is that concat_ws, but it keeps the column
+    # nullable like every other read-back column.
     sentences = write_stage(
         man, "sentences",
-        extract_sentences(pages, lang=lang, use_html=use_html),
-        run_id=run_id)
+        extract_sentences(pages, lang=lang, use_html=use_html)
+        .drop("sent_text"),
+        run_id=run_id).withColumn("sent_text", F.array_join("tokens", " "))
 
     tagged = write_stage(
         man, "tagged", tag_sentences(sentences, tagger_dictionary), run_id=run_id)
@@ -139,10 +144,15 @@ def run_kg_pipeline(
         .withColumn("prior", F.lit(0.0))
         .withColumn("entity_type", F.col("label"))
     )
+    # every linker's alias_norm is norm_surface(surface): not stored,
+    # rebuilt as the read-back's first column
     linked_total = write_stage(
         man, "linked",
-        linked.select(*resid_mentions.columns).unionByName(resid_mentions),
+        linked.select(*resid_mentions.columns).unionByName(resid_mentions)
+        .drop("alias_norm"),
         run_id=run_id)
+    linked_total = linked_total.select(
+        norm_surface(F.col("surface")).alias("alias_norm"), "*")
 
     # --- canonicalization ------------------------------------------------
     # edges: alias ambiguity (same alias -> several ids) + LSH candidate

@@ -1,7 +1,10 @@
-"""write_stage failure paths (plans/checkpoints.py): a crash after the
-table commit resumes to the uninterrupted run's tables, and lineage
-counts every stage exactly once."""
+"""write_stage contracts (plans/checkpoints.py): a crash after the table
+commit resumes to the uninterrupted run's tables, lineage counts every
+stage exactly once, a moved work dir resumes, every table is zstd, and
+the KG stages store no column that their read-back derives."""
 
+import json
+from datetime import datetime
 from pathlib import Path
 
 import pyarrow.parquet as pq
@@ -9,6 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ner_extractor_spark import synth
+from ner_extractor_spark.operators.extract import extract_sentences
+from ner_extractor_spark.operators.link import norm_surface
 from ner_extractor_spark.plans.checkpoints import (StageManifest,
                                                    read_lineage, write_stage)
 from ner_extractor_spark.plans.kg_pipeline import run_kg_pipeline
@@ -116,3 +121,191 @@ def test_partitioned_stage_has_one_lineage_file(spark, kg_clean):
     assert t["partition_id"] == list(range(len(parts)))
     assert t["row_count"] == [pq.read_metadata(p).num_rows for p in parts]
     assert _lineage_sums(spark, str(kg_clean))["triples"] == n
+
+
+def _stage_files(wd):
+    """``{relative path: mtime_ns}`` of every stage and lineage file."""
+    return {str(p.relative_to(wd)): p.stat().st_mtime_ns
+            for d in [*KG_STAGES, "_lineage"]
+            for p in (wd / d).rglob("*") if p.is_file()}
+
+
+def _manifest_ts(wd):
+    m = json.loads((wd / "_manifest.json").read_text())
+    return {s: e["ts"] for s, e in m["stages"].items()}
+
+
+def test_moved_work_dir_resumes_without_rewriting(spark, kg_inputs,
+                                                  tmp_path):
+    a, b = tmp_path / "a", tmp_path / "b"
+    _run_kg(spark, kg_inputs, a)
+    a.rename(b)
+    files, ts = _stage_files(b), _manifest_ts(b)
+    assert set(ts) == set(KG_STAGES)
+    _run_kg(spark, kg_inputs, b)
+    assert _stage_files(b) == files
+    assert _manifest_ts(b) == ts
+
+
+def test_manifest_with_absolute_paths_resumes(spark, tmp_path):
+    old, new = tmp_path / "old", tmp_path / "new"
+    man = StageManifest(str(old))
+    write_stage(man, "s", spark.range(10))
+    m = json.loads(man.manifest_path.read_text())
+    assert m["stages"]["s"]["path"] == "s"
+    m["stages"]["s"]["path"] = str(old / "s")    # the older absolute form
+    man.manifest_path.write_text(json.dumps(m))
+    assert StageManifest(str(old)).done("s")
+    old.rename(new)
+    assert StageManifest(str(new)).done("s")
+
+
+def _assert_zstd(root, stages):
+    """Every column chunk of every parquet file under each stage dir
+    and ``_lineage`` is ZSTD-compressed."""
+    for d in [*stages, "_lineage"]:
+        codecs = set()
+        for p in (Path(root) / d).rglob("*.parquet"):
+            md = pq.read_metadata(p)
+            codecs |= {md.row_group(g).column(c).compression
+                       for g in range(md.num_row_groups)
+                       for c in range(md.num_columns)}
+        assert codecs == {"ZSTD"}, (d, codecs)
+
+
+def test_every_stage_and_lineage_file_is_zstd(spark, kg_clean, tmp_path):
+    _assert_zstd(kg_clean, KG_STAGES)
+
+    from ner_extractor_spark.plans.curation_pipeline import \
+        run_curation_pipeline
+    from test_curation_pipeline import _docs, _weights
+    cp = tmp_path / "cp"
+    r = run_curation_pipeline(spark, _docs(spark), _weights(spark), str(cp),
+                              chunk_size=8, budget=20)
+    assert r.packed.count() > 0
+    _assert_zstd(cp, ["verdict", "cleaned", "chunks", "packed"])
+
+    from ner_extractor_spark.operators.exact_substr import \
+        exact_substring_spans
+    d = spark.createDataFrame([(1, "a b c d e f g h i j unique one"),
+                               (2, "x y a b c d e f g h i j z")],
+                              "doc_id int, text string")
+    exact_substring_spans(d, n=8, stage_dir=str(tmp_path / "grams")).count()
+    _assert_zstd(tmp_path / "grams", ["positional_grams"])
+
+
+# --- derived columns ------------------------------------------------------
+# KGResult's schema at the commit before the KG stages stopped storing
+# sent_text and linked.alias_norm; every read-back column is nullable
+KG_RESULT = {
+    "sentences": "struct<url:string,sent_id:int,tokens:array<string>,"
+                 "sent_text:string>",
+    "mentions": "struct<url:string,sent_id:int,start:int,end:int,"
+                "surface:string,label:string>",
+    "triples_raw": "struct<url:string,sent_id:int,subj_start:int,"
+                   "subj_surface:string,subj_label:string,pred:string,"
+                   "obj_start:int,obj_surface:string,obj_label:string>",
+    "linked": "struct<alias_norm:string,url:string,sent_id:int,start:int,"
+              "end:int,surface:string,label:string,entity_id:string,"
+              "prior:double,entity_type:string>",
+    "components": "struct<node:string,comp:string>",
+    "triples": "struct<subj:string,pred:string,obj:string,url:string,"
+               "sent_id:int,subj_bucket:int>",
+}
+LINKERS = ["exact", "embed", "coherent"]
+TS = datetime(2024, 1, 1)
+# lines whose spacing a whitespace-normalising serializer would change
+ODD_TEXT = (" leading space\ntrailing space \ndoubled  space\n"
+            "  Acme  Corp  met  Bob  \n \nplain line")
+ODD_HTML = (b"<html><body><p> leading</p><p>trailing </p>"
+            b"<p>doubled  space &amp;  more</p><div>  both  </div>"
+            b"</body></html>")
+
+
+@pytest.fixture(scope="module")
+def odd_pages(spark, kg_inputs):
+    pages, _ = kg_inputs
+    return pages.unionByName(spark.createDataFrame(
+        [("http://odd.test/text", TS, None, ODD_TEXT, "en"),
+         ("http://odd.test/html", TS, ODD_HTML, None, "en")],
+        schema=PAGES))
+
+
+@pytest.fixture(scope="module")
+def kg_by_linker(spark, kg_inputs, odd_pages, tmp_path_factory):
+    """linker -> (fresh KGResult, resumed KGResult, work dir)."""
+    _, aliases = kg_inputs
+    rel = spark.createDataFrame([], "qa string, qb string, w double")
+    out = {}
+    for linker in LINKERS:
+        wd = tmp_path_factory.mktemp(f"kg_{linker}")
+        runs = [run_kg_pipeline(
+            spark, odd_pages, aliases, synth.tagger_dictionary(), str(wd),
+            lang=None, linker=linker,
+            relatedness=rel if linker == "coherent" else None)
+            for _ in range(2)]
+        out[linker] = (*runs, wd)
+    return out
+
+
+@pytest.mark.parametrize("linker", LINKERS)
+def test_kg_result_schema_unchanged(kg_by_linker, linker):
+    fresh, resumed, _ = kg_by_linker[linker]
+    for res in (fresh, resumed):
+        for table, ddl in KG_RESULT.items():
+            schema = getattr(res, table).schema
+            assert schema.simpleString() == ddl, (table, schema)
+            assert all(f.nullable for f in schema.fields), table
+
+
+def _lines(df):
+    return sorted((r["url"], r["sent_id"], r["sent_text"])
+                  for r in df.select("url", "sent_id", "sent_text")
+                  .collect())
+
+
+def test_sent_text_readback_is_the_extractors_line(spark, kg_inputs,
+                                                   odd_pages, kg_by_linker,
+                                                   tmp_path):
+    fresh, resumed, _ = kg_by_linker["exact"]
+    want = _lines(extract_sentences(odd_pages, lang=None))
+    odd = {t for u, _, t in want if u == "http://odd.test/text"}
+    assert {" leading space", "trailing space ", "doubled  space",
+            "  Acme  Corp  met  Bob  ", " "} <= odd
+    assert _lines(fresh.sentences) == want
+    assert _lines(resumed.sentences) == want
+
+    _, aliases = kg_inputs
+    html = run_kg_pipeline(spark, odd_pages, aliases,
+                           synth.tagger_dictionary(), str(tmp_path / "h"),
+                           lang=None, use_html=True)
+    want = _lines(extract_sentences(odd_pages, lang=None, use_html=True))
+    assert any(u == "http://odd.test/html" for u, _, _ in want)
+    assert _lines(html.sentences) == want
+
+
+@pytest.mark.parametrize("linker", LINKERS)
+def test_linked_alias_norm_is_norm_surface(kg_inputs, kg_by_linker, linker):
+    _, aliases = kg_inputs
+    fresh, resumed, _ = kg_by_linker[linker]
+    for res in (fresh, resumed):
+        lk = res.linked
+        assert lk.filter(~F.col("alias_norm").eqNullSafe(
+            norm_surface(F.col("surface")))).count() == 0
+        # a dictionary-linked mention's rebuilt alias_norm is the alias
+        # the linker matched it on
+        exact = lk.filter("prior > 0").select("alias_norm", "entity_id")
+        assert exact.count() > 0
+        assert exact.subtract(
+            aliases.select("alias_norm", "entity_id")).count() == 0
+
+
+@pytest.mark.parametrize("linker", LINKERS)
+def test_stage_files_lack_derived_columns(kg_by_linker, linker):
+    _, _, wd = kg_by_linker[linker]
+    for stage, derived in [("sentences", "sent_text"),
+                           ("linked", "alias_norm")]:
+        parts = sorted((wd / stage).glob("part-*.parquet"))
+        assert parts, stage
+        for p in parts:
+            assert derived not in pq.read_schema(p).names, p
