@@ -14,10 +14,10 @@ over a corpus-sized per-document score table.  Two aggregation modes:
   (and for grouped calibration the dominant group IS corpus-sized).
 
 * approx (``approx_percentile``): Greenwald-Khanna quantile summaries —
-  bounded ~O(accuracy · log n) state per partial aggregate, map-side
+  bounded ~O(ACCURACY · log n) state per partial aggregate, map-side
   combined and MERGEABLE like any algebraic aggregate, so no task ever
   holds the group.  Returns an actual observed value whose rank is
-  within n/accuracy of the target rank (no interpolation).  This is
+  within n/ACCURACY of the target rank (no interpolation).  This is
   the at-scale production default; exact remains the oracle/parity
   mode.  Exact-vs-approx cut agreement on the sandbox corpus is
   pinned within tolerance in tests/test_curation.py.
@@ -27,16 +27,19 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+#: ``approx_percentile`` accuracy of every approximate cut (Spark's
+#: default): rank error n/10000, state ~O(10000 · log n) per partial
+ACCURACY = 10000
 
-def quantile_agg(col: str | Column, q: float, approx: bool = False,
-                 accuracy: int = 10000) -> Column:
+def quantile_agg(col: str | Column, q: float,
+                 approx: bool = False) -> Column:
     """Aggregate expression for the ``q``-quantile of ``col``.
 
     ``approx=False`` -> exact interpolated ``percentile`` (single-buffer
     memory bound — see module docstring); ``approx=True`` ->
-    ``approx_percentile(col, q, accuracy)`` (mergeable bounded state,
+    ``approx_percentile(col, q, ACCURACY)`` (mergeable bounded state,
     the at-scale mode)."""
     c = F.col(col) if isinstance(col, str) else col
     if approx:
-        return F.approx_percentile(c, F.lit(q), F.lit(accuracy))
+        return F.approx_percentile(c, F.lit(q), F.lit(ACCURACY))
     return F.percentile(c, F.lit(q))

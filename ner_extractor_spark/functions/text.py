@@ -91,10 +91,17 @@ def quality_features(df, text_col: str = "text"):
     )
 
 
+def normalize_text(col) -> Column:
+    """lower + collapse internal whitespace + trim: the one text
+    normalizer behind dedup digests, fingerprints, trigram/shingle
+    text and alias surfaces (SURVEY F8)."""
+    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+
+
 def fingerprint(col) -> Column:
     """Document fingerprint: md5 over the whitespace-normalized,
     lowercased text (rolling-hash stand-in; portable + deterministic)."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")))
+    return F.md5(normalize_text(col))
 
 
 # Gopher-style hard quality thresholds (Rae et al. 2021 §A1.1 family —

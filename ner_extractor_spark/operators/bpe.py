@@ -117,7 +117,6 @@ def train_bpe(docs: DataFrame, n_merges: int = 8,
 def bpe_encode(docs: DataFrame, rules: list[tuple[str, str]],
                id_col: str = "doc_id",
                text_col: str = "text",
-               vocab_join: str = "broadcast",
                fuse: int = 8) -> DataFrame:
     """(doc_id, pos, word, encoded): the corpus tokenized under learned
     merge rules (rank order).
@@ -125,16 +124,10 @@ def bpe_encode(docs: DataFrame, rules: list[tuple[str, str]],
     Scale shape: the merge folds run over the DISTINCT-WORD table (one
     ``apply_merge`` + localCheckpoint per rule — work ∝ vocabulary,
     exactly like training), then one join maps the corpus tokens to
-    their encodings.  ``vocab_join`` (VERDICT r04 #3): the DEFAULT
-    ``'broadcast'`` ships the encoded vocabulary to every executor —
-    the corpus side then never shuffles at all (plan-pinned in
-    tests/test_plans.py), which is right whenever the distinct-word
-    table fits the broadcast threshold (a deduplicated, zipf-truncated
-    tokenizer vocabulary usually does).  ``'shuffle'`` joins on the
-    word as an ordinary shuffle join for a beyond-broadcast
-    vocabulary — the corpus side's key is then zipf-hot ('the'-class
-    stopwords), the AQE-skew-join / salt_explode posture shared with
-    the TF-IDF idf join.
+    their encodings.  That join broadcasts the encoded vocabulary
+    (VERDICT r04 #3) — a deduplicated tokenizer vocabulary is bounded
+    — so the corpus side never shuffles at all (plan-pinned in
+    tests/test_plans.py and tests/test_bpe.py).
 
     ``fuse`` (r06): merge folds are CHAINED LAZILY in one expression,
     with a localCheckpoint barrier only every ``fuse`` rules — the
@@ -143,8 +136,6 @@ def bpe_encode(docs: DataFrame, rules: list[tuple[str, str]],
     the chunking bounds codegen expression depth for production-sized
     rule lists (thousands of merges).  Identical output either way
     (equality-pinned in tests/test_bpe.py)."""
-    if vocab_join not in ("broadcast", "shuffle"):
-        raise ValueError(f"vocab_join: {vocab_join}")
     if fuse <= 0:
         raise ValueError("fuse must be positive")
     toks = (docs.select(
@@ -162,16 +153,11 @@ def bpe_encode(docs: DataFrame, rules: list[tuple[str, str]],
         # one barrier per CHUNK (and one before the join, so the
         # corpus-side plan stays visibly shuffle-free — the vocab
         # distinct's exchange lives behind the checkpoint, plan-pinned
-        # in test_bpe_encode_vocab_join_modes)
+        # in test_bpe_encode_broadcasts_vocab)
         syms = syms.localCheckpoint()
     enc = syms.select("word", F.array_join("syms", " ").alias("encoded"))
-    # shuffle mode pins a real shuffle-hash join (same idiom as
-    # lm.trigram_logprob) so the beyond-broadcast path is exercised
-    # even at sandbox scale where the vocab would auto-broadcast
-    enc = (F.broadcast(enc) if vocab_join == "broadcast"
-           else enc.hint("shuffle_hash"))
-    return toks.join(enc, on="word").select("doc_id", "pos", "word",
-                                            "encoded")
+    return toks.join(F.broadcast(enc), on="word").select(
+        "doc_id", "pos", "word", "encoded")
 
 
 def encode_word(word: str, rules: list[tuple[str, str]]) -> list[str]:
@@ -191,8 +177,7 @@ def encode_word(word: str, rules: list[tuple[str, str]]) -> list[str]:
 
 def bpe_fertility(docs: DataFrame, rules: list[tuple[str, str]],
                   id_col: str = "doc_id", text_col: str = "text",
-                  lang_col: str = "lang",
-                  vocab_join: str = "broadcast") -> DataFrame:
+                  lang_col: str = "lang") -> DataFrame:
     """Per-language tokenizer fertility profile: how many BPE tokens
     the learned merges spend per word and how many characters each
     token carries, by language.  THE tokenizer-quality read before
@@ -204,14 +189,13 @@ def bpe_fertility(docs: DataFrame, rules: list[tuple[str, str]],
     fertility = tokens/word, chars_per_token).
 
     Scale shape: ``bpe_encode``'s corpus pass (vocab folds over the
-    distinct-word table + one broadcast/shuffle vocab join) feeds a
+    distinct-word table + one broadcast vocab join) feeds a
     doc-keyed partial aggregate, which then joins the corpus table
     only at per-doc grain for the language key and collapses to
     ≤ n_languages rows — both aggregates map-side combined; nothing
     wider than the corpus token table is ever materialized.
     """
-    enc = bpe_encode(docs, rules, id_col=id_col, text_col=text_col,
-                     vocab_join=vocab_join)
+    enc = bpe_encode(docs, rules, id_col=id_col, text_col=text_col)
     perdoc = enc.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_words"),
         F.sum(F.size(F.split(F.col("encoded"), " "))).alias("n_tokens"),

@@ -206,8 +206,7 @@ def perceptron_scores(docs: DataFrame, weights: DataFrame, *,
 
 def calibrate_classifier_threshold(scored: DataFrame,
                                    keep_rate: float = 0.8,
-                                   approx: bool = False,
-                                   accuracy: int = 10000) -> DataFrame:
+                                   approx: bool = False) -> DataFrame:
     """1-row (cls_threshold): the probability cut that keeps the top
     ``keep_rate`` fraction of documents by classifier probability —
     the same corpus-derived-calibration posture as
@@ -227,7 +226,7 @@ def calibrate_classifier_threshold(scored: DataFrame,
 
     q = 1.0 - keep_rate
     return scored.agg(F.round(
-        quantile_agg("prob", q, approx, accuracy), 6)
+        quantile_agg("prob", q, approx), 6)
         .alias("cls_threshold"))
 
 
@@ -237,8 +236,7 @@ def classify_docs_calibrated(docs: DataFrame, weights: DataFrame,
                              text_col: str = "text",
                              bias: float = 0.0,
                              n_buckets: int = N_BUCKETS,
-                             approx: bool = False,
-                             accuracy: int = 10000) -> DataFrame:
+                             approx: bool = False) -> DataFrame:
     """``classify_docs`` with the threshold derived from the corpus'
     own probability distribution instead of a scalar: keep = prob >=
     the (1 - keep_rate) percentile.
@@ -253,7 +251,7 @@ def classify_docs_calibrated(docs: DataFrame, weights: DataFrame,
                            text_col=text_col, bias=bias,
                            n_buckets=n_buckets).localCheckpoint()
     thr = calibrate_classifier_threshold(scored, keep_rate=keep_rate,
-                                         approx=approx, accuracy=accuracy)
+                                         approx=approx)
     return (scored.drop("keep").crossJoin(F.broadcast(thr))
             .select("doc_id", "n_terms", "score", "prob",
                     (F.col("prob") >= F.col("cls_threshold")).alias("keep"),

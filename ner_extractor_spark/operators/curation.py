@@ -30,7 +30,6 @@ from ner_extractor_spark.session import run_concurrently
 
 def curation_scores(docs: DataFrame, *, id_col: str = "doc_id",
                     text_col: str = "text",
-                    lm_join: str = "broadcast",
                     shingles: DataFrame | None = None) \
         -> tuple[DataFrame, DataFrame]:
     """(lm, dup): the two corpus-statistics per-document score tables
@@ -43,16 +42,9 @@ def curation_scores(docs: DataFrame, *, id_col: str = "doc_id",
     callers running calibrate + curate back-to-back should
     ``localCheckpoint`` each returned DataFrame once and feed the
     pinned copies to both — ``calibrated_curation`` does exactly
-    that.
-
-    ``lm_join`` reaches ``trigram_logprob`` (ADVICE r05: the composed
-    entry points must not hard-pin the broadcast path): 'broadcast'
-    (lazy default, right for a bounded |alphabet|³ model), 'shuffle'
-    for multilingual models beyond any broadcast threshold, or 'auto'
-    to pick by model row count (costs an eager count job)."""
+    that."""
     lm = trigram_logprob(docs, trigram_model(docs, text_col=text_col),
-                         id_col=id_col, text_col=text_col,
-                         join_mode=lm_join)
+                         id_col=id_col, text_col=text_col)
     dup = dup_ngram_fraction(docs, id_col=id_col, text_col=text_col,
                              shingles=shingles)
     return lm, dup
@@ -64,9 +56,7 @@ def calibrate_thresholds(docs: DataFrame | None = None, *,
                          lm_quantile: float = 0.05,
                          dup_quantile: float = 0.95,
                          scores: tuple[DataFrame, DataFrame] | None = None,
-                         lm_join: str = "broadcast",
                          approx: bool = False,
-                         accuracy: int = 10000,
                          ) -> DataFrame:
     """1-row (lm_threshold, dup_threshold): quantile cuts over THIS
     corpus' own score distributions (VERDICT r03 #6 — thresholds are
@@ -89,10 +79,10 @@ def calibrate_thresholds(docs: DataFrame | None = None, *,
       task holds O(corpus-rows) doubles, an executor-OOM/straggler at
       10⁹+ documents.  Use only where the score table fits one task.
     * ``approx=True`` (the at-scale default for production runs):
-      ``approx_percentile`` with ``accuracy`` (Greenwald-Khanna
-      summaries — mergeable, bounded state ~O(accuracy·log n) per
+      ``approx_percentile`` at ``quantiles.ACCURACY`` (Greenwald-Khanna
+      summaries — mergeable, bounded state ~O(ACCURACY·log n) per
       partial, combined map-side like any aggregate).  Returns an
-      actual observed value within 1/accuracy relative rank error of
+      actual observed value within 1/ACCURACY relative rank error of
       the target quantile instead of the interpolated midpoint; cut
       agreement vs the exact mode is pinned within tolerance in
       tests/test_curation.py.
@@ -105,14 +95,13 @@ def calibrate_thresholds(docs: DataFrame | None = None, *,
     if scores is None:
         if docs is None:
             raise ValueError("pass docs or scores")
-        scores = curation_scores(docs, id_col=id_col, text_col=text_col,
-                                 lm_join=lm_join)
+        scores = curation_scores(docs, id_col=id_col, text_col=text_col)
     lm, dup = scores
     lm_t = lm.agg(F.round(
-        _quantile("lm_score", lm_quantile, approx, accuracy), 6)
+        _quantile("lm_score", lm_quantile, approx), 6)
         .alias("lm_threshold"))
     dup_t = dup.agg(F.round(
-        _quantile("dup_fraction", dup_quantile, approx, accuracy), 6)
+        _quantile("dup_fraction", dup_quantile, approx), 6)
         .alias("dup_threshold"))
     return lm_t.crossJoin(dup_t)
 
@@ -144,7 +133,6 @@ def curate_corpus(docs: DataFrame, *, id_col: str = "doc_id",
                   lm_threshold: float = -8.0,
                   thresholds: DataFrame | None = None,
                   scores: tuple[DataFrame, DataFrame] | None = None,
-                  lm_join: str = "broadcast",
                   near: DataFrame | bool = False,
                   ) -> DataFrame:
     """(id_col, keep, reason) for every input document.
@@ -196,8 +184,7 @@ def curate_corpus(docs: DataFrame, *, id_col: str = "doc_id",
     base = base.withColumn(
         "keeper", F.min(id_col).over(Window.partitionBy("h")))
     if scores is None:
-        scores = curation_scores(docs, id_col=id_col, text_col=text_col,
-                                 lm_join=lm_join)
+        scores = curation_scores(docs, id_col=id_col, text_col=text_col)
     lm = scores[0].select(F.col("doc_id").alias(id_col), "lm_score")
     dup = scores[1].select(id_col, "dup_fraction")
     joined = (base.join(lm, id_col)
@@ -234,9 +221,7 @@ def calibrated_curation(docs: DataFrame, *, id_col: str = "doc_id",
                         text_col: str = "text",
                         lm_quantile: float = 0.05,
                         dup_quantile: float = 0.95,
-                        lm_join: str = "broadcast",
                         approx: bool = False,
-                        accuracy: int = 10000,
                         near: DataFrame | bool = False) -> DataFrame:
     """The calibrate-then-curate composition with ONE corpus pass per
     score family: each score table is localCheckpoint-ed (an eager,
@@ -248,12 +233,10 @@ def calibrated_curation(docs: DataFrame, *, id_col: str = "doc_id",
     explode/join would each execute twice — two redundant full-corpus
     shuffle passes at 100 TB.
 
-    ``lm_join``/``approx``/``accuracy``/``near`` thread straight
-    through to ``trigram_logprob`` / ``calibrate_thresholds`` /
-    ``curate_corpus`` (ADVICE r05 + VERDICT r05 #1/#3): production
-    runs at web scale want ``approx=True`` (mergeable quantile state)
-    and ``lm_join='shuffle'`` (multilingual model beyond broadcast);
-    the exact broadcast defaults are the oracle-parity mode.
+    ``approx``/``near`` thread straight through to
+    ``calibrate_thresholds`` / ``curate_corpus`` (VERDICT r05 #1/#3):
+    production runs at web scale want ``approx=True`` (mergeable
+    quantile state); the exact default is the oracle-parity mode.
 
     ``near=True`` additionally SHARES one exploded-shingle pass (r06):
     ``dup_ngram_fraction`` and the MinHash signature aggregate both
@@ -279,8 +262,8 @@ def calibrated_curation(docs: DataFrame, *, id_col: str = "doc_id",
     def chain_lm():
         # trigram_logprob checkpoints the model itself
         return trigram_logprob(docs, trigram_model(docs, text_col=text_col),
-                               id_col=id_col, text_col=text_col,
-                               join_mode=lm_join).localCheckpoint()
+                               id_col=id_col, text_col=text_col
+                               ).localCheckpoint()
 
     def chain_dup():
         shingles = None
@@ -301,6 +284,6 @@ def calibrated_curation(docs: DataFrame, *, id_col: str = "doc_id",
     thr = calibrate_thresholds(scores=(lm, dup),
                                lm_quantile=lm_quantile,
                                dup_quantile=dup_quantile,
-                               approx=approx, accuracy=accuracy)
+                               approx=approx)
     return curate_corpus(docs, id_col=id_col, text_col=text_col,
                          thresholds=thr, scores=(lm, dup), near=near)

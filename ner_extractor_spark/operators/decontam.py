@@ -29,8 +29,7 @@ def contamination_pairs(docs: DataFrame, eval_docs: DataFrame, *,
                         id_col: str = "doc_id", text_col: str = "text",
                         eval_id_col: str = "eval_id",
                         eval_text_col: str = "text",
-                        min_shared: int = 1,
-                        join_mode: str = "broadcast") -> DataFrame:
+                        min_shared: int = 1) -> DataFrame:
     """(doc_id, eval_id, n_shared): every training document sharing
     >= ``min_shared`` distinct word ``n``-grams with an eval document,
     with the count of shared shingles — the audit table (who leaked
@@ -40,14 +39,9 @@ def contamination_pairs(docs: DataFrame, eval_docs: DataFrame, *,
     one shingle (the ``word_shingles`` convention), so exact copies of
     short benchmark rows are still caught.
 
-    ``join_mode``: ``'broadcast'`` (default) ships the benchmark
-    shingle table — right for typical suites (10³–10⁵ rows); a
-    mega-benchmark union whose shingle table outgrows the broadcast
-    threshold uses ``'shuffle'`` (shuffle-hash on the shingle — the
-    corpus side's shingles are zipf-hot, the AQE-skew posture shared
-    with lm/tfidf)."""
-    if join_mode not in ("broadcast", "shuffle"):
-        raise ValueError(f"join_mode: {join_mode}")
+    The benchmark shingle table is broadcast (typical suites are
+    10³–10⁵ rows), so the corpus-sized shingle side never shuffles
+    before the (doc, eval) aggregate."""
     corpus = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(word_shingles(F.col(text_col), n)).alias("shingle"))
@@ -55,9 +49,7 @@ def contamination_pairs(docs: DataFrame, eval_docs: DataFrame, *,
         F.col(eval_id_col).alias("eval_id"),
         F.explode(word_shingles(F.col(eval_text_col), n)).alias("shingle")
     ).distinct()
-    bench = (F.broadcast(bench) if join_mode == "broadcast"
-             else bench.hint("shuffle_hash"))
-    return (corpus.join(bench, on="shingle")
+    return (corpus.join(F.broadcast(bench), on="shingle")
             .groupBy("doc_id", "eval_id")
             .agg(F.count(F.lit(1)).alias("n_shared"))
             .filter(F.col("n_shared") >= min_shared))

@@ -20,14 +20,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text import normalize_text
 from ..session import run_concurrently
 
 N_HASHES = 12
 BAND_SIZE = 2  # 6 bands of 2 -> s-curve threshold ~ (1/6)^(1/2) ~ 0.41
-
-
-def normalize_text(col):
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id",

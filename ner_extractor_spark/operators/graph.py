@@ -195,8 +195,7 @@ def khop_neighborhood(edges: DataFrame, k: int = 3,
 
 
 def induced_subgraph(edges: DataFrame, membership: DataFrame,
-                     src: str = "src", dst: str = "dst",
-                     broadcast: bool = True) -> DataFrame:
+                     src: str = "src", dst: str = "dst") -> DataFrame:
     """The edge set INDUCED by a node subset — the serving payload a
     ``khop_neighborhood`` retrieval actually renders (the entity
     page's local subgraph, both endpoints inside the neighborhood).
@@ -207,13 +206,10 @@ def induced_subgraph(edges: DataFrame, membership: DataFrame,
     membership set.  With a CAPPED walk the membership is bounded by
     max_degree^k + k (a few thousand rows at serving-realistic caps),
     so both joins broadcast and the corpus-sized edge table never
-    shuffles — that is the default.  ``broadcast=False`` selects
-    ordinary shuffle joins for uncapped walks over hub-dense graphs,
-    where the neighborhood can be a large fraction of the graph."""
+    shuffles."""
     def side(col, alias):
-        m = membership.select(F.col("node").alias(col),
-                              F.col("hop").alias(alias))
-        return F.broadcast(m) if broadcast else m
+        return F.broadcast(membership.select(F.col("node").alias(col),
+                                             F.col("hop").alias(alias)))
     extra = [c for c in edges.columns if c not in (src, dst)]
     return (edges.join(side(src, "src_hop"), on=src)
             .join(side(dst, "dst_hop"), on=dst)

@@ -32,13 +32,11 @@ replays unrolled, round for round.
 Scale shape (100 TB posture): the embedding table is
 (n_entities + n_relations) x dim rows — bounded model state, the same
 class as the BPE vocabulary.  Per round: four equi-joins of the pair
-table against the embedding table keyed on (id, i) — broadcast when
-the vocabulary fits (default), shuffle-hash keyed on the entity id
-beyond that (popular-entity skew is the ``link_exact_salted`` /
-AQE-skew-join situation); one pair-keyed window for the energies (the
-partition key is the pair identity — maximal cardinality, skew-free);
-one gradient aggregation keyed on (kind, id, i) — bounded by the
-model size and map-side combined.  Driver state per round is nothing
+table against the broadcast embedding table keyed on (id, i); one
+pair-keyed window for the energies (the partition key is the pair
+identity — maximal cardinality, skew-free); one gradient aggregation
+keyed on (kind, id, i) — bounded by the model size and map-side
+combined.  Driver state per round is nothing
 but the lineage-truncation checkpoint, exactly like ``train_perceptron``.
 """
 
@@ -85,11 +83,10 @@ def transe_pairs(neg: DataFrame,
             .agg(F.count(F.lit(1)).alias("w")))
 
 
-def _pair_energies(pairs: DataFrame, emb: DataFrame,
-                   broadcast: bool = True) -> DataFrame:
+def _pair_energies(pairs: DataFrame, emb: DataFrame) -> DataFrame:
     """Per (pair, dim): gp = h_i + r_i - t_i and gn = h_i + r_i - tn_i.
-    Four equi-joins against the embedding table on (id, i)."""
-    e = F.broadcast(emb) if broadcast else emb
+    Four equi-joins against the broadcast embedding table on (id, i)."""
+    e = F.broadcast(emb)
     eh = e.filter(F.col("kind") == "e").select(
         F.col("id").alias("_h"), F.col("i").alias("_hi"),
         F.col("v").alias("vh"))
@@ -117,8 +114,7 @@ def _pair_energies(pairs: DataFrame, emb: DataFrame,
 
 def transe_train(pairs: DataFrame, *, dim: int = 4, n_rounds: int = 2,
                  lr_den: int = 1024, margin: float = 1.0,
-                 clip: float = 2.0, seed: str = "te",
-                 broadcast: bool = True) -> DataFrame:
+                 clip: float = 2.0, seed: str = "te") -> DataFrame:
     """Learn (kind, id, i, v) TransE embeddings over weighted
     (h, r, t, tn, w) pairs (``transe_pairs``).  Round k:
 
@@ -144,7 +140,7 @@ def transe_train(pairs: DataFrame, *, dim: int = 4, n_rounds: int = 2,
            ).localCheckpoint()
     pw = Window.partitionBy("h", "r", "t", "tn")
     for _ in range(n_rounds):
-        pd = _pair_energies(pairs, emb, broadcast)
+        pd = _pair_energies(pairs, emb)
         pd = (pd.withColumn("dp", F.sum(F.abs("gp")).over(pw))
               .withColumn("dn", F.sum(F.abs("gn")).over(pw))
               .filter(F.lit(margin) + F.col("dp") - F.col("dn") > 0))
@@ -172,15 +168,14 @@ def transe_train(pairs: DataFrame, *, dim: int = 4, n_rounds: int = 2,
     return emb
 
 
-def transe_eval(pairs: DataFrame, emb: DataFrame, *,
-                broadcast: bool = True) -> DataFrame:
+def transe_eval(pairs: DataFrame, emb: DataFrame) -> DataFrame:
     """Per-relation energy separation of the learned embeddings:
     (pred, n_pairs, n_sep, sep_rate) where a pair SEPARATES when the
     positive energy is strictly below the corrupted energy
     (d_pos < d_neg — the ranking the embeddings exist to induce).
     Exact dyadic comparison, weighted by pair multiplicity.  One
     pair-keyed aggregation + one relation-keyed rollup."""
-    pd = _pair_energies(pairs, emb, broadcast)
+    pd = _pair_energies(pairs, emb)
     pv = (pd.groupBy("h", "r", "t", "tn", "w")
           .agg(F.sum(F.abs("gp")).alias("dp"),
                F.sum(F.abs("gn")).alias("dn")))
@@ -194,8 +189,7 @@ def transe_eval(pairs: DataFrame, emb: DataFrame, *,
 
 
 def transe_link_predict(triples: DataFrame, emb: DataFrame, *,
-                        pool_cap: int = 10000,
-                        broadcast: bool = True) -> DataFrame:
+                        pool_cap: int = 10000) -> DataFrame:
     """Link-prediction evaluation of trained embeddings — the
     standard FILTERED ranking protocol of the TransE literature: for
     every distinct positive (h, r, t), rank t among the same-label
@@ -210,8 +204,8 @@ def transe_link_predict(triples: DataFrame, emb: DataFrame, *,
     Scale shape: candidates = positives x pool (the ``pool_cap``-
     bounded, per-label sorted-distinct pool of ``negative_samples``);
     at web scale full ranking is the expensive eval step and
-    ``pool_cap`` IS the sampled-ranking bound.  Three embedding joins
-    (broadcast default), one (h,r,t,c)-keyed energy aggregation, one
+    ``pool_cap`` IS the sampled-ranking bound.  Three broadcast
+    embedding joins, one (h,r,t,c)-keyed energy aggregation, one
     (h,r,t) rank aggregation, one per-relation rollup."""
     pos = (triples.groupBy(F.col("subj_surface").alias("h"),
                            F.col("pred").alias("r"),
@@ -223,7 +217,7 @@ def transe_link_predict(triples: DataFrame, emb: DataFrame, *,
                          1, pool_cap).alias("pl")))
     cand = (pos.join(F.broadcast(pool), "lbl")
             .select("h", "r", "t", F.explode("pl").alias("c")))
-    e = F.broadcast(emb) if broadcast else emb
+    e = F.broadcast(emb)
     eh = e.filter(F.col("kind") == "e").select(
         F.col("id").alias("_h"), F.col("i").alias("_hi"),
         F.col("v").alias("vh"))

@@ -27,14 +27,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions.text import normalize_text as norm_surface
 from .dedup import BAND_SIZE, N_HASHES, _bands_from_sig, _minhash_sig
 
 SHINGLE = 3
-
-
-def norm_surface(col):
-    """lower + collapse internal whitespace + trim (SURVEY F8)."""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
 def best_alias_rows(aliases: DataFrame) -> DataFrame:

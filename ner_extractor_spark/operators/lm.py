@@ -43,32 +43,17 @@ def trigram_model(docs: DataFrame, text_col: str = "text") -> DataFrame:
             .groupBy("tri").agg(F.count(F.lit(1)).alias("c")))
 
 
-#: above this many model rows the broadcast stops paying — a (tri, c)
-#: row is tiny, but 1M rows is already ~an order of magnitude past the
-#: default 10MB spark.sql.autoBroadcastJoinThreshold, so 'auto' flips
-#: to the shuffle join well before the broadcast would start spilling
-BROADCAST_MAX_MODEL_ROWS = 1_000_000
-
-
 def trigram_logprob(docs: DataFrame, model: DataFrame,
                     id_col: str = "doc_id",
-                    text_col: str = "text",
-                    join_mode: str = "broadcast") -> DataFrame:
+                    text_col: str = "text") -> DataFrame:
     """(doc_id, n_tris, lm_score): mean smoothed trigram log-prob of
     each document under ``model`` — low scores = out-of-distribution
     text (gibberish, wrong language, encoding damage).
 
-    ``join_mode`` (VERDICT r03 #7): ``'broadcast'`` (the DEFAULT —
-    ADVICE r04: right for the common case of a bounded |alphabet|³
-    model) ships the model to every executor; for real multilingual
-    web text the model can exceed any broadcast threshold, so
-    ``'shuffle'`` joins on ``tri`` as an ordinary shuffle join (hot
-    trigrams — 'the'-class — are the AQE-skew-join / salt_explode
-    case, the same posture as the TF-IDF idf join).  ``'auto'`` picks
-    by model row count against ``BROADCAST_MAX_MODEL_ROWS`` — note
-    this triggers an EAGER ``model.count()`` job at plan-construction
-    time, which is why it is opt-in rather than the default.  Both
-    modes are equality-pinned in tests/test_lm.py.
+    The model join is a broadcast: the model is bounded by
+    |alphabet|³ rows, so it ships to every executor and the corpus-
+    sized trigram side is not shuffled for the join (the per-doc
+    aggregate is the only shuffle).
 
     The model is localCheckpoint-ed: it feeds TWO consumers (the
     scoring join and the (N, D) normalizer aggregate), and Catalyst
@@ -77,23 +62,14 @@ def trigram_logprob(docs: DataFrame, model: DataFrame,
     subtrees differ) — without a barrier the full corpus trigram
     explode+aggregate runs TWICE per scoring pass (measured: one model
     pass is ~40% of the whole scoring job at sf0.1).  The barrier
-    materializes the BOUNDED (≤ |alphabet|³ rows) model once, before
-    the ``'auto'`` row count reads it."""
-    if join_mode not in ("broadcast", "shuffle", "auto"):
-        raise ValueError(f"join_mode: {join_mode}")
+    materializes the BOUNDED (≤ |alphabet|³ rows) model once."""
     model = model.localCheckpoint()
-    if join_mode == "auto":
-        join_mode = ("broadcast"
-                     if model.count() <= BROADCAST_MAX_MODEL_ROWS
-                     else "shuffle")
     norm = model.agg(F.sum("c").alias("n_total"),
                      F.count(F.lit(1)).alias("n_distinct"))
     tris = docs.select(F.col(id_col).alias("doc_id"),
                        F.explode(char_trigrams(F.col(text_col)))
                        .alias("tri"))
-    keyed_model = (F.broadcast(model) if join_mode == "broadcast"
-                   else model.hint("shuffle_hash"))
-    scored = (tris.join(keyed_model, on="tri", how="left")
+    scored = (tris.join(F.broadcast(model), on="tri", how="left")
               .crossJoin(F.broadcast(norm))
               .select("doc_id",
                       F.log((F.coalesce(F.col("c"), F.lit(0)) + F.lit(1.0))
@@ -108,9 +84,7 @@ def ppl_buckets(docs: DataFrame, *, id_col: str = "doc_id",
                 text_col: str = "text",
                 lm: DataFrame | None = None,
                 lo_q: float = 1 / 3, hi_q: float = 2 / 3,
-                join_mode: str = "broadcast",
-                approx: bool = False,
-                accuracy: int = 10000) -> DataFrame:
+                approx: bool = False) -> DataFrame:
     """CCNet head/middle/tail perplexity bucketing (VERDICT r04 #4 —
     the standard companion of the LM gate): cut the corpus into three
     quality tiers by quantiles of the per-document trigram-LM score.
@@ -139,18 +113,17 @@ def ppl_buckets(docs: DataFrame, *, id_col: str = "doc_id",
     the WHOLE corpus' scores in one aggregation buffer (single-task
     O(corpus-rows) memory — an OOM at 10⁹+ docs).  ``approx=True`` =
     ``approx_percentile`` (mergeable Greenwald-Khanna state, the
-    at-scale default; see functions/quantiles).  ``join_mode``
-    reaches ``trigram_logprob`` (ADVICE r05)."""
+    at-scale default; see functions/quantiles)."""
     from ner_extractor_spark.functions.quantiles import quantile_agg
 
     if lm is None:
         lm = trigram_logprob(docs, trigram_model(docs, text_col=text_col),
-                             id_col=id_col, text_col=text_col,
-                             join_mode=join_mode).localCheckpoint()
+                             id_col=id_col, text_col=text_col
+                             ).localCheckpoint()
     cuts = lm.agg(
-        F.round(quantile_agg("lm_score", lo_q, approx, accuracy), 6)
+        F.round(quantile_agg("lm_score", lo_q, approx), 6)
         .alias("lo_cut"),
-        F.round(quantile_agg("lm_score", hi_q, approx, accuracy), 6)
+        F.round(quantile_agg("lm_score", hi_q, approx), 6)
         .alias("hi_cut"))
     bucket = (F.when(F.col("lm_score") >= F.col("hi_cut"), F.lit("head"))
               .when(F.col("lm_score") < F.col("lo_cut"), F.lit("tail"))
@@ -164,9 +137,7 @@ def ppl_buckets_grouped(docs: DataFrame, group_col: str, *,
                         id_col: str = "doc_id",
                         text_col: str = "text",
                         lo_q: float = 1 / 3, hi_q: float = 2 / 3,
-                        join_mode: str = "broadcast",
-                        approx: bool = False,
-                        accuracy: int = 10000) -> DataFrame:
+                        approx: bool = False) -> DataFrame:
     """``ppl_buckets`` with PER-GROUP calibration (CCNet calibrates
     per language; per-domain is the same shape): the quantile cuts
     come from each group's own score distribution, so a low-resource
@@ -186,15 +157,14 @@ def ppl_buckets_grouped(docs: DataFrame, group_col: str, *,
     from ner_extractor_spark.functions.quantiles import quantile_agg
 
     lm = trigram_logprob(docs, trigram_model(docs, text_col=text_col),
-                         id_col=id_col, text_col=text_col,
-                         join_mode=join_mode)
+                         id_col=id_col, text_col=text_col)
     lm = lm.join(
         docs.select(F.col(id_col).alias("doc_id"), group_col), "doc_id") \
         .localCheckpoint()
     cuts = lm.groupBy(group_col).agg(
-        F.round(quantile_agg("lm_score", lo_q, approx, accuracy), 6)
+        F.round(quantile_agg("lm_score", lo_q, approx), 6)
         .alias("lo_cut"),
-        F.round(quantile_agg("lm_score", hi_q, approx, accuracy), 6)
+        F.round(quantile_agg("lm_score", hi_q, approx), 6)
         .alias("hi_cut"))
     bucket = (F.when(F.col("lm_score") >= F.col("hi_cut"), F.lit("head"))
               .when(F.col("lm_score") < F.col("lo_cut"), F.lit("tail"))

@@ -210,8 +210,7 @@ def chunk_documents(docs: DataFrame, chunk_size: int = 128,
 def chunk_documents_bpe(docs: DataFrame, rules: list, chunk_size: int = 128,
                         stride: int | None = None,
                         id_col: str = "doc_id",
-                        text_col: str = "text",
-                        vocab_join: str = "broadcast") -> DataFrame:
+                        text_col: str = "text") -> DataFrame:
     """``chunk_documents`` with windows budgeted in BPE TOKENS
     (VERDICT r05 #5): pretraining sequence budgets count tokenizer
     tokens, not whitespace words, so the chunk boundary must fall on
@@ -228,8 +227,7 @@ def chunk_documents_bpe(docs: DataFrame, rules: list, chunk_size: int = 128,
     document yields one empty chunk (n_tokens 0) — TOTAL over input.
 
     Scale shape: ``bpe_encode`` does the vocabulary-sized merge folds
-    + one corpus map-side join (broadcast by default, ``vocab_join=
-    'shuffle'`` beyond the threshold); then ONE aggregation keyed on
+    + one corpus map-side broadcast join; then ONE aggregation keyed on
     the maximal-cardinality doc id rebuilds the per-document token
     stream (array_sort over collected (pos, syms) structs — the
     per-doc array is the same memory class as chunk_documents' token
@@ -241,8 +239,7 @@ def chunk_documents_bpe(docs: DataFrame, rules: list, chunk_size: int = 128,
         raise ValueError("chunk_size and stride must be positive")
     from .bpe import bpe_encode
 
-    enc = bpe_encode(docs, rules, id_col=id_col, text_col=text_col,
-                     vocab_join=vocab_join)
+    enc = bpe_encode(docs, rules, id_col=id_col, text_col=text_col)
     seq = (enc.groupBy("doc_id")
            .agg(F.flatten(F.transform(
                F.array_sort(F.collect_list(

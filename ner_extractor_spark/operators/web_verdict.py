@@ -43,9 +43,7 @@ def full_web_verdict(docs: DataFrame, weights: DataFrame, *,
                      dup_quantile: float = 0.95,
                      dup_threshold: float | None = None,
                      lm_threshold: float | None = None,
-                     lm_join: str = "broadcast",
                      approx: bool = False,
-                     accuracy: int = 10000,
                      near: DataFrame | bool = False,
                      cls_keep: DataFrame | None = None,
                      curation: DataFrame | None = None) -> DataFrame:
@@ -59,12 +57,10 @@ def full_web_verdict(docs: DataFrame, weights: DataFrame, *,
     ``calibrated_curation`` (single shared score pass).  Passing only
     one is ambiguous and rejected.
 
-    Scale knobs, threaded through the whole composition (ADVICE r05 +
-    VERDICT r05 #1/#3): ``lm_join`` selects the trigram-model join
-    strategy ('broadcast' default / 'shuffle' for beyond-broadcast
-    multilingual models / 'auto'); ``approx=True`` switches every
-    calibration quantile to mergeable ``approx_percentile`` state (the
-    at-scale mode — exact is the oracle-parity default);
+    Scale knobs, threaded through the whole composition (VERDICT r05
+    #1/#3): ``approx=True`` switches every calibration quantile to
+    mergeable ``approx_percentile`` state (the at-scale mode — exact
+    is the oracle-parity default);
     ``near=True`` (or a precomputed (id, nd_keeper) table) inserts the
     MinHash near-duplicate rule into the curation chain.
 
@@ -105,13 +101,11 @@ def full_web_verdict(docs: DataFrame, weights: DataFrame, *,
         cur = calibrated_curation(docs, id_col=id_col, text_col=text_col,
                                   lm_quantile=lm_quantile,
                                   dup_quantile=dup_quantile,
-                                  lm_join=lm_join, approx=approx,
-                                  accuracy=accuracy, near=near)
+                                  approx=approx, near=near)
     else:
         cur = curate_corpus(docs, id_col=id_col, text_col=text_col,
                             dup_threshold=dup_threshold,
-                            lm_threshold=lm_threshold,
-                            lm_join=lm_join, near=near)
+                            lm_threshold=lm_threshold, near=near)
     cur = cur.select(id_col, F.col("reason").alias("_cr"))
     if cls_keep is not None:
         cls = cls_keep.select(F.col(id_col), F.col("cls_keep"))

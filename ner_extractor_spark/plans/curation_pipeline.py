@@ -9,7 +9,8 @@ per-partition lineage + metrics):
        -> packed training bins (bucket-partitioned table)
 
 Every stage writes a durable table via the StageManifest (resume =
-skip stage; each write appends per-partition lineage rows), so a
+skip stage; each write replaces that stage's per-partition lineage
+file), so a
 crashed 100 TB assembly restarts from its last finished stage instead
 of re-running the verdict.  All stage logic is the declarative
 operators from ``..operators`` — this module only sequences and

@@ -80,7 +80,6 @@ def run_web_verdict_stream(docs_stream: DataFrame, weights: DataFrame,
                            cls_threshold: float = 0.5,
                            dup_threshold: float | None = None,
                            lm_threshold: float | None = None,
-                           lm_join: str = "broadcast",
                            approx: bool = False,
                            near: bool = False,
                            perceptron_weights: DataFrame | None = None,
@@ -100,8 +99,8 @@ def run_web_verdict_stream(docs_stream: DataFrame, weights: DataFrame,
     parity and replay idempotence pinned in
     tests/test_curation_stream.py.
 
-    r06 knobs, mirroring the batch operator: ``lm_join`` /
-    ``approx`` (the at-scale quantile mode — only meaningful with
+    r06 knobs, mirroring the batch operator: ``approx`` (the
+    at-scale quantile mode — only meaningful with
     batch-local calibration) / ``near`` (per-batch MinHash
     near-duplicate rule — cross-batch near-dups are upstream stream
     dedup's job, same division of labor as exact dups);
@@ -137,7 +136,7 @@ def run_web_verdict_stream(docs_stream: DataFrame, weights: DataFrame,
             text_col=text_col, blocked_domains=blocked_domains,
             blocked_terms=blocked_terms, cls_threshold=cls_threshold,
             dup_threshold=dup_threshold, lm_threshold=lm_threshold,
-            lm_join=lm_join, approx=approx, near=near, cls_keep=gate)
+            approx=approx, near=near, cls_keep=gate)
         (verdict.write.mode("overwrite")
          .parquet(f"{out_dir}/verdicts/batch_id={batch_id}"))
 

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text import fingerprint
+
 
 def dedup_pages_stream(pages_stream: DataFrame,
                        watermark: str = "2 hours",
@@ -29,10 +31,8 @@ def dedup_pages_stream(pages_stream: DataFrame,
     """Exact near-real-time dedup: first page per normalized-content
     digest wins; duplicates arriving within the watermark horizon are
     dropped, state older than the horizon is evicted."""
-    key = F.md5(F.trim(F.regexp_replace(F.lower(F.col(text_col)),
-                                        r"\s+", " ")))
     return (pages_stream
-            .withColumn("content_key", key)
+            .withColumn("content_key", fingerprint(F.col(text_col)))
             .withWatermark("warc_ts", watermark)
             .dropDuplicatesWithinWatermark(["content_key"])
             .drop("content_key"))

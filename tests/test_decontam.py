@@ -68,15 +68,15 @@ def test_min_shared_raises_the_bar(spark):
     assert (3, 100) not in {(r["doc_id"], r["eval_id"]) for r in hi}
 
 
-def test_contamination_shuffle_mode_identical(spark):
-    """The beyond-broadcast shuffle join returns identical pairs and
-    its plan really does not broadcast the benchmark side."""
+def test_contamination_pairs_broadcasts_benchmark(spark):
+    """The benchmark shingle table is the broadcast side of the one
+    shingle join: the corpus shingles are never shuffled into a
+    sort-merge or shuffled-hash join."""
     from ner_extractor_spark.operators.decontam import contamination_pairs
 
     train, bench = _dfs(spark)
-    bc = sorted(map(tuple, contamination_pairs(train, bench,
-                                               n=3).collect()))
-    sh_df = contamination_pairs(train, bench, n=3, join_mode="shuffle")
-    assert sorted(map(tuple, sh_df.collect())) == bc
-    plan = sh_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in plan, plan
+    plan = contamination_pairs(train, bench, n=3)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "ShuffledHashJoin" not in plan, plan

@@ -102,15 +102,6 @@ def test_transe_weighting_equals_duplicates(spark):
     assert w1 == w2
 
 
-def test_transe_shuffle_mode_identical(spark):
-    # broadcast=False (the beyond-broadcast entity-vocabulary path)
-    # computes the identical embedding table
-    p = transe_pairs(_neg_df(spark))
-    b = _collect_emb(transe_train(p, dim=4, n_rounds=2, broadcast=True))
-    s = _collect_emb(transe_train(p, dim=4, n_rounds=2, broadcast=False))
-    assert b == s
-
-
 def test_transe_training_reduces_hinge_loss(spark):
     # the point of the exercise: total weighted hinge loss over the
     # training pairs must not increase from init to trained (batch

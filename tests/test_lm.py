@@ -90,32 +90,6 @@ def test_lm_partition_invariance(spark):
     assert a == b
 
 
-def test_trigram_logprob_shuffle_mode_identical(spark):
-    """VERDICT r03 #7: the beyond-broadcast shuffle-join scoring mode
-    returns bit-identical scores to the broadcast path, and its plan
-    really does shuffle (no broadcast of the model)."""
-    docs = spark.createDataFrame(
-        [(i, f"doc {i} the quick brown fox " * (1 + i % 3))
-         for i in range(30)], "doc_id int, text string")
-    from ner_extractor_spark.operators.lm import (trigram_logprob,
-                                                  trigram_model)
-    model = trigram_model(docs)
-    bc = sorted(map(tuple, trigram_logprob(
-        docs, model, join_mode="broadcast").collect()))
-    sh_df = trigram_logprob(docs, model, join_mode="shuffle")
-    sh = sorted(map(tuple, sh_df.collect()))
-    assert bc == sh and len(bc) == 30
-    plan = sh_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in plan, plan
-    # auto mode picks broadcast for this bounded model
-    auto = sorted(map(tuple, trigram_logprob(
-        docs, model, join_mode="auto").collect()))
-    assert auto == bc
-    import pytest
-    with pytest.raises(ValueError):
-        trigram_logprob(docs, model, join_mode="bogus")
-
-
 def test_ppl_buckets_cuts_and_assignment(spark):
     """CCNet head/middle/tail bucketing: cuts are the exact 1/3 / 2/3
     interpolated percentiles of the lm scores (numpy replica), every
