@@ -235,9 +235,8 @@ def main(argv=None):
 
     if run.get("warc"):
         from pyspark.sql import functions as F
-        from ner_extractor_spark.sources.warc import (read_warc,
-                                                      warc_to_pages)
-        pages = (warc_to_pages(read_warc(spark, run["warc"]))
+        from ner_extractor_spark.sources.warc import read_warc_pages
+        pages = (read_warc_pages(spark, run["warc"])
                  .withColumn("text", F.lit(None).cast("string"))
                  .withColumn("lang", F.lit(None).cast("string")))
     elif synth_n:

@@ -31,6 +31,10 @@ from pyspark.sql import DataFrame, functions as F
 from .dedup import normalize_text
 
 END = "</w>"
+#: merge rules ``bpe_encode`` folds lazily between two barriers: the
+#: chunk bounds codegen expression depth for production-sized rule
+#: lists (thousands of merges)
+FUSE = 8
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -116,8 +120,7 @@ def train_bpe(docs: DataFrame, n_merges: int = 8,
 
 def bpe_encode(docs: DataFrame, rules: list[tuple[str, str]],
                id_col: str = "doc_id",
-               text_col: str = "text",
-               fuse: int = 8) -> DataFrame:
+               text_col: str = "text") -> DataFrame:
     """(doc_id, pos, word, encoded): the corpus tokenized under learned
     merge rules (rank order).
 
@@ -129,15 +132,12 @@ def bpe_encode(docs: DataFrame, rules: list[tuple[str, str]],
     — so the corpus side never shuffles at all (plan-pinned in
     tests/test_plans.py and tests/test_bpe.py).
 
-    ``fuse`` (r06): merge folds are CHAINED LAZILY in one expression,
-    with a localCheckpoint barrier only every ``fuse`` rules — the
+    Merge folds are CHAINED LAZILY in one expression, with a
+    localCheckpoint barrier only every ``FUSE`` rules — the
     fully-sequential one-job-per-rule form cost 6 barrier round trips
-    for a 6-rule encode (measured 1.33 → 0.84 s at sf0.1 fused);
-    the chunking bounds codegen expression depth for production-sized
-    rule lists (thousands of merges).  Identical output either way
-    (equality-pinned in tests/test_bpe.py)."""
-    if fuse <= 0:
-        raise ValueError("fuse must be positive")
+    for a 6-rule encode (measured 1.33 → 0.84 s at sf0.1 fused).
+    Output equals the driver-side ``encode_word`` across a chunk
+    boundary (pinned in tests/test_bpe.py)."""
     toks = (docs.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(F.split(normalize_text(F.col(text_col)), " "))
@@ -145,9 +145,9 @@ def bpe_encode(docs: DataFrame, rules: list[tuple[str, str]],
         .filter(F.col("word") != ""))
     syms = init_symbols(
         toks.select("word").distinct().withColumn("cnt", F.lit(1)))
-    for i in range(0, len(rules), fuse):
+    for i in range(0, len(rules), FUSE):
         c = F.col("syms")
-        for left, right in rules[i:i + fuse]:
+        for left, right in rules[i:i + FUSE]:
             c = apply_merge(c, left, right)
         syms = syms.select("word", "cnt", c.alias("syms"))
         # one barrier per CHUNK (and one before the join, so the

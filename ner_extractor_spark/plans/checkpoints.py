@@ -24,13 +24,26 @@ unmarked, so the resume rewrites the table and its lineage.
 Storage: partitioned parquet under a base dir, every stage table and
 lineage file compressed with ``CODEC`` (zstd at its default level: a
 quarter smaller than Snappy on the KG stages).  A pipeline stores no
-column that its read-back can derive from another stored column: the
-KG ``sentences`` stage stores ``tokens`` and rebuilds
-``sent_text = concat_ws(" ", tokens)`` on read, and ``linked`` rebuilds
-``alias_norm = norm_surface(surface)`` (``plans/kg_pipeline.py``).  No
-downstream stage reads either column, so column pruning removes both
-derivations from its plan.  The manifest stores each stage's path
-relative to its base dir, so a moved work dir still resumes.
+column that its read-back derives from another stored column, and off
+its map-only path no column an earlier stage holds
+(``plans/kg_pipeline.py``):
+
+* ``sentences`` stores ``tokens`` and rebuilds
+  ``sent_text = concat_ws(" ", tokens)`` on read;
+* ``triples_raw`` stores ``(url, sent_id, subj_start, pred, obj_start)``
+  and ``linked`` ``(url, sent_id, start, entity_id, prior,
+  entity_type)``; ``KGResult`` joins the surface and label of each
+  triple end, and the mention columns of each link (with
+  ``alias_norm = norm_surface(surface)``), from ``mentions`` on
+  ``(url, sent_id, start)``.  No downstream stage reads those columns,
+  so the joins stay off the pipeline's own path.
+
+``tagged`` keeps its copy of ``tokens``: a join back to ``sentences``
+would sit on the exchange-free pages -> triples_raw path.  Stage
+tables written before a column was dropped still hold it and still
+resume: the read-back selects the narrower schema.  The manifest
+stores each stage's path relative to its base dir, so a moved work dir
+still resumes.
 """
 
 from __future__ import annotations

@@ -18,6 +18,7 @@ triple set is total (nothing silently dropped — north rule lineage).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -27,17 +28,29 @@ from ..operators.link import link_exact, lsh_candidates, norm_surface, unlinked
 from ..operators.ner import tag_sentences
 from ..operators.spans import extract_mentions
 from ..operators.triples import extract_triples_local
+from ..schemas import TRIPLES_RAW
 from .checkpoints import StageManifest, write_stage
 
 
 @dataclass
 class KGResult:
+    """The stage tables as read back.  ``triples_raw`` and ``linked``
+    are built on first read by joining their stored stage with
+    ``mentions``: only a caller that reads them plans the join."""
     sentences: DataFrame
     mentions: DataFrame
-    triples_raw: DataFrame
-    linked: DataFrame
+    stored_triples_raw: DataFrame
+    stored_linked: DataFrame
     components: DataFrame
     triples: DataFrame
+
+    @cached_property
+    def triples_raw(self) -> DataFrame:
+        return _triples_with_mentions(self.stored_triples_raw, self.mentions)
+
+    @cached_property
+    def linked(self) -> DataFrame:
+        return _linked_with_mentions(self.stored_linked, self.mentions)
 
 
 def run_kg_pipeline(
@@ -56,7 +69,19 @@ def run_kg_pipeline(
     """``use_html=True`` extracts text from the ``html`` binary column
     via the real markup-aware extractor (operators/html.py) instead of
     trusting a pre-extracted ``text`` column — the shape for raw-crawl
-    inputs where text is null."""
+    inputs where text is null.
+
+    Precondition: each ``url`` occurs once in ``pages``.  Rows are keyed
+    by ``(url, sent_id)``.  The stages up to ``triples_raw`` are computed
+    row by row, but every join on the key mixes the pages of a repeated
+    ``url``: the final triples join multiplies their rows, and the joins
+    to ``mentions`` (the coherent linker's, and those that rebuild
+    ``KGResult.linked`` and ``.triples_raw``) pair a row with each
+    page's mention at the same ``(url, sent_id, start)``, so those
+    tables show the other page's surfaces, labels and spans.  Nothing
+    here checks it (a check would put an exchange on the map-only
+    path); ``sources/warc.read_warc_pages`` keeps one capture per
+    ``url`` for crawl input."""
     man = StageManifest(work_dir)
 
     # stored columns only: sent_text is concat_ws(" ", tokens) (the
@@ -69,17 +94,24 @@ def run_kg_pipeline(
         .drop("sent_text"),
         run_id=run_id).withColumn("sent_text", F.array_join("tokens", " "))
 
+    # tagged keeps tokens: joining them back from sentences would put an
+    # exchange on the map-only pages -> triples_raw path once sentences
+    # outgrow the broadcast size
     tagged = write_stage(
         man, "tagged", tag_sentences(sentences, tagger_dictionary), run_id=run_id)
 
     mentions = write_stage(
         man, "mentions", extract_mentions(tagged), run_id=run_id)
 
-    # zero-shuffle fused extractor: triple pairing is sentence-local
+    # zero-shuffle fused extractor: triple pairing is sentence-local.
+    # triples_raw and linked store their row key and the columns they
+    # add; KGResult joins the mention columns back in lazily, off the
+    # pipeline's own path.
     from ..operators.triples import DEFAULT_PREDICATES
     triples_raw = write_stage(
         man, "triples_raw",
-        extract_triples_local(tagged, predicates=predicates or DEFAULT_PREDICATES),
+        extract_triples_local(tagged, predicates=predicates or DEFAULT_PREDICATES)
+        .select("url", "sent_id", "subj_start", "pred", "obj_start"),
         run_id=run_id)
 
     # --- linking ---------------------------------------------------------
@@ -144,15 +176,12 @@ def run_kg_pipeline(
         .withColumn("prior", F.lit(0.0))
         .withColumn("entity_type", F.col("label"))
     )
-    # every linker's alias_norm is norm_surface(surface): not stored,
-    # rebuilt as the read-back's first column
     linked_total = write_stage(
         man, "linked",
         linked.select(*resid_mentions.columns).unionByName(resid_mentions)
-        .drop("alias_norm"),
+        .select("url", "sent_id", "start", "entity_id", "prior",
+                "entity_type"),
         run_id=run_id)
-    linked_total = linked_total.select(
-        norm_surface(F.col("surface")).alias("alias_norm"), "*")
 
     # --- canonicalization ------------------------------------------------
     # edges: alias ambiguity (same alias -> several ids) + LSH candidate
@@ -206,3 +235,31 @@ def run_kg_pipeline(
 
     return KGResult(sentences, mentions, triples_raw, linked_total,
                     components, triples)
+
+
+def _triples_with_mentions(triples_raw: DataFrame,
+                           mentions: DataFrame) -> DataFrame:
+    """The stored ``(url, sent_id, subj_start, pred, obj_start)`` rows
+    with each end's surface and label from its mention, in
+    ``TRIPLES_RAW`` order.  1:1: a triple's spans and the mentions are
+    the same ``span_decode_expr`` over the same tags, so each
+    ``(url, sent_id, start)`` is one mention."""
+    def end(role):
+        return mentions.select(
+            "url", "sent_id", F.col("start").alias(f"{role}_start"),
+            F.col("surface").alias(f"{role}_surface"),
+            F.col("label").alias(f"{role}_label"))
+    return (triples_raw
+            .join(end("subj"), on=["url", "sent_id", "subj_start"])
+            .join(end("obj"), on=["url", "sent_id", "obj_start"])
+            .select(*TRIPLES_RAW.fieldNames()))
+
+
+def _linked_with_mentions(linked: DataFrame,
+                          mentions: DataFrame) -> DataFrame:
+    """The stored ``(url, sent_id, start, entity_id, prior,
+    entity_type)`` rows with their mention's end, surface and label,
+    and ``alias_norm = norm_surface(surface)`` first: every linker keys
+    on that normalised surface."""
+    return (mentions.join(linked, on=["url", "sent_id", "start"])
+            .select(norm_surface(F.col("surface")).alias("alias_norm"), "*"))

@@ -27,6 +27,8 @@ module closes that step with pure public-spec machinery:
     one task per file (WARC files are written ~1 GiB by crawlers —
     the natural partition grain; at 100 TB that is ~100k files, and
     binaryFile's maxPartitionBytes packing handles small-file skew).
+  * ``read_warc_pages`` — ``read_warc`` → ``pages``, keeping the
+    latest capture of each url (the KG pipeline's row key).
 
 Payload bytes stay opaque binary through the parse (the multimodal
 column discipline); downstream ``html_extract_text`` consumes them.
@@ -228,6 +230,18 @@ def warc_to_pages(parsed: DataFrame) -> DataFrame:
                                    "yyyy-MM-dd'T'HH:mm:ss'Z'")
                     .alias("warc_ts"),
                     F.col("payload").alias("html")))
+
+
+def read_warc_pages(spark: SparkSession, path: str) -> DataFrame:
+    """The WARC files under ``path`` as ``pages`` (url, warc_ts, html),
+    one row per url: the latest capture (ties: the larger payload).
+    A crawl repeats urls and ``run_kg_pipeline`` keys its rows on
+    ``url``; the dedup is one aggregation exchange ahead of the
+    pipeline's map-only path."""
+    latest = F.max(F.struct("warc_ts", "html")).alias("p")
+    return (warc_to_pages(read_warc(spark, path))
+            .groupBy("url").agg(latest)
+            .select("url", "p.warc_ts", "p.html"))
 
 
 # binaryFile's fixed schema — streaming sources cannot infer it

@@ -84,11 +84,12 @@ def test_word_counts_normalizes(spark):
     assert got == {"the": 3, "x": 1}
 
 
-def test_bpe_encode_matches_driver_encoder(spark):
+def _assert_encode_matches_driver(spark, n_merges):
     from ner_extractor_spark.operators.bpe import bpe_encode, encode_word
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(TEXTS)], "doc_id int, text string")
-    rules = [(r[1], r[2]) for r in _python_bpe(TEXTS, 6)]
+    rules = [(r[1], r[2]) for r in _python_bpe(TEXTS, n_merges)]
+    assert len(rules) == n_merges
     got = {(r["doc_id"], r["pos"]): (r["word"], r["encoded"])
            for r in bpe_encode(docs, rules).collect()}
     for (doc_id, pos), (word, encoded) in got.items():
@@ -96,6 +97,10 @@ def test_bpe_encode_matches_driver_encoder(spark):
     # every token position of every doc is present
     n_tokens = sum(len(t.split()) for t in TEXTS)
     assert len(got) == n_tokens
+
+
+def test_bpe_encode_matches_driver_encoder(spark):
+    _assert_encode_matches_driver(spark, 6)
 
 
 def test_bpe_encode_broadcasts_vocab(spark):
@@ -114,21 +119,10 @@ def test_bpe_encode_broadcasts_vocab(spark):
 
 
 def test_bpe_encode_fused_chunks_match_per_rule_barriers(spark):
-    """r06: the fuse-chunked lazy merge chain is value-identical to
-    one-barrier-per-rule (fuse=1), including across a chunk boundary
-    (fuse smaller than the rule count)."""
-    from ner_extractor_spark.operators.bpe import bpe_encode, train_bpe
-
-    d = spark.createDataFrame(
-        [(1, "low lower lowest low low slow slower"),
-         (2, "new newer newest new knew")],
-        "doc_id int, text string")
-    rules = [(r["left"], r["right"])
-             for r in train_bpe(d, n_merges=5).collect()]
-    full = sorted(map(tuple, bpe_encode(d, rules, fuse=8).collect()))
-    per_rule = sorted(map(tuple, bpe_encode(d, rules, fuse=1).collect()))
-    split = sorted(map(tuple, bpe_encode(d, rules, fuse=2).collect()))
-    assert full == per_rule == split
+    """More rules than one lazily fused chunk: the encode crosses a
+    ``FUSE`` barrier and still equals the driver encoder."""
+    from ner_extractor_spark.operators.bpe import FUSE
+    _assert_encode_matches_driver(spark, 2 * FUSE + 3)
 
 
 def test_bpe_fertility(spark):

@@ -1,9 +1,11 @@
 """write_stage contracts (plans/checkpoints.py): a crash after the table
 commit resumes to the uninterrupted run's tables, lineage counts every
 stage exactly once, a moved work dir resumes, every table is zstd, and
-the KG stages store no column that their read-back derives."""
+the KG stages store no column that their read-back derives or joins
+back in from an earlier stage."""
 
 import json
+import shutil
 from datetime import datetime
 from pathlib import Path
 
@@ -14,10 +16,14 @@ from pyspark.sql import functions as F
 from ner_extractor_spark import synth
 from ner_extractor_spark.operators.extract import extract_sentences
 from ner_extractor_spark.operators.link import norm_surface
+from ner_extractor_spark.operators.ner import tag_sentences
+from ner_extractor_spark.operators.spans import extract_mentions
+from ner_extractor_spark.operators.triples import extract_triples_local
+from ner_extractor_spark.plans import kg_pipeline
 from ner_extractor_spark.plans.checkpoints import (StageManifest,
                                                    read_lineage, write_stage)
 from ner_extractor_spark.plans.kg_pipeline import run_kg_pipeline
-from ner_extractor_spark.schemas import ALIASES, PAGES
+from ner_extractor_spark.schemas import ALIASES, MENTIONS, PAGES
 
 KG_STAGES = ["sentences", "tagged", "mentions", "triples_raw", "linked",
              "components", "triples"]
@@ -234,18 +240,22 @@ def odd_pages(spark, kg_inputs):
 @pytest.fixture(scope="module")
 def kg_by_linker(spark, kg_inputs, odd_pages, tmp_path_factory):
     """linker -> (fresh KGResult, resumed KGResult, work dir)."""
-    _, aliases = kg_inputs
-    rel = spark.createDataFrame([], "qa string, qb string, w double")
     out = {}
     for linker in LINKERS:
         wd = tmp_path_factory.mktemp(f"kg_{linker}")
-        runs = [run_kg_pipeline(
-            spark, odd_pages, aliases, synth.tagger_dictionary(), str(wd),
-            lang=None, linker=linker,
-            relatedness=rel if linker == "coherent" else None)
-            for _ in range(2)]
+        runs = [_run_linker(spark, kg_inputs, odd_pages, wd, linker)
+                for _ in range(2)]
         out[linker] = (*runs, wd)
     return out
+
+
+def _run_linker(spark, kg_inputs, pages, wd, linker):
+    _, aliases = kg_inputs
+    rel = (spark.createDataFrame([], "qa string, qb string, w double")
+           if linker == "coherent" else None)
+    return run_kg_pipeline(spark, pages, aliases, synth.tagger_dictionary(),
+                           str(wd), lang=None, linker=linker,
+                           relatedness=rel)
 
 
 @pytest.mark.parametrize("linker", LINKERS)
@@ -300,12 +310,119 @@ def test_linked_alias_norm_is_norm_surface(kg_inputs, kg_by_linker, linker):
             aliases.select("alias_norm", "entity_id")).count() == 0
 
 
+# stage -> columns its read-back derives or joins in from an earlier stage
+NOT_STORED = {
+    "sentences": {"sent_text"},
+    "triples_raw": {"subj_surface", "subj_label", "obj_surface",
+                    "obj_label"},
+    "linked": {"alias_norm", "end", "surface", "label"},
+}
+
+
 @pytest.mark.parametrize("linker", LINKERS)
 def test_stage_files_lack_derived_columns(kg_by_linker, linker):
     _, _, wd = kg_by_linker[linker]
-    for stage, derived in [("sentences", "sent_text"),
-                           ("linked", "alias_norm")]:
+    for stage, derived in NOT_STORED.items():
         parts = sorted((wd / stage).glob("part-*.parquet"))
         assert parts, stage
         for p in parts:
-            assert derived not in pq.read_schema(p).names, p
+            assert not derived & set(pq.read_schema(p).names), p
+
+
+def _rows(df, cols=None):
+    return sorted(map(tuple, df.select(*(cols or df.columns)).collect()))
+
+
+def _tagged(pages):
+    """The ``tagged`` rows as the operators produce them, never stored."""
+    return tag_sentences(extract_sentences(pages, lang=None),
+                         synth.tagger_dictionary())
+
+
+@pytest.mark.parametrize("linker", LINKERS)
+def test_rebuilt_tables_equal_unstored_operator_output(spark, odd_pages,
+                                                       kg_by_linker, linker):
+    fresh, resumed, wd = kg_by_linker[linker]
+    tagged = _tagged(odd_pages)
+    triples_raw = _rows(extract_triples_local(tagged))
+    mentions = _rows(extract_mentions(tagged))
+    link_cols = spark.read.parquet(str(wd / "linked")).columns
+    links = _table_rows(spark, wd, "linked")
+    assert triples_raw and mentions and links
+    for res in (fresh, resumed):
+        assert _rows(res.triples_raw) == triples_raw
+        # every mention is linked exactly once: its own columns come
+        # from mentions, the link columns from the stored stage
+        assert _rows(res.linked, MENTIONS.fieldNames()) == mentions
+        assert _rows(res.linked, link_cols) == links
+
+
+def test_work_dir_with_wide_stage_tables_resumes(spark, kg_inputs,
+                                                 odd_pages, kg_by_linker,
+                                                 tmp_path):
+    """Stage tables written before their copied columns were dropped
+    still hold them; a resume reads them with the narrow schema."""
+    fresh, _, wd = kg_by_linker["exact"]
+    old = tmp_path / "old"
+    shutil.copytree(wd, old)
+    wide = {"triples_raw": fresh.triples_raw,
+            "linked": fresh.linked.drop("alias_norm")}
+    for stage, df in wide.items():
+        df.write.mode("overwrite").parquet(str(old / stage))
+        assert set(df.columns) >= NOT_STORED[stage] - {"alias_norm"}
+    files = _stage_files(old)
+
+    res = _run_linker(spark, kg_inputs, odd_pages, old, "exact")
+    assert _stage_files(old) == files
+    for table in KG_RESULT:
+        got, want = getattr(res, table), getattr(fresh, table)
+        assert got.schema == want.schema, table
+        assert _rows(got) == _rows(want), table
+
+
+def _stage_inputs(monkeypatch, spark, kg_inputs, pages, wd, linker):
+    """Rerun the pipeline into ``wd``; return the frame each stage was
+    handed to write (stage -> DataFrame) and the ``KGResult``."""
+    seen = {}
+    orig = kg_pipeline.write_stage
+
+    def spy(man, stage, df, *a, **k):
+        seen[stage] = df
+        return orig(man, stage, df, *a, **k)
+
+    monkeypatch.setattr(kg_pipeline, "write_stage", spy)
+    return seen, _run_linker(spark, kg_inputs, pages, wd, linker)
+
+
+@pytest.mark.parametrize("linker", LINKERS)
+def test_final_triples_stage_reads_no_mentions(spark, kg_inputs, odd_pages,
+                                               kg_by_linker, monkeypatch,
+                                               linker):
+    """The joins that rebuild ``KGResult.linked``/``.triples_raw`` stay
+    off the pipeline's own path: the final triples read the stored
+    ``triples_raw`` and ``linked`` tables, not ``mentions``."""
+    _, _, wd = kg_by_linker[linker]
+    seen, res = _stage_inputs(monkeypatch, spark, kg_inputs, odd_pages, wd,
+                              linker)
+
+    def scans(df):
+        return {Path(f).parent.name for f in df.inputFiles()}
+
+    assert scans(seen["triples"]) == {"triples_raw", "linked", "components"}
+    assert "mentions" in scans(res.linked)
+    assert "mentions" in scans(res.triples_raw)
+
+
+def test_pages_to_triples_raw_stages_are_exchange_free(spark, kg_inputs,
+                                                       odd_pages,
+                                                       kg_by_linker,
+                                                       monkeypatch):
+    """The frames the pipeline itself writes from ``pages`` up to
+    ``triples_raw``, each built on the previous stage's read-back, plan
+    no exchange: the map-only path that dominates at corpus scale."""
+    _, _, wd = kg_by_linker["exact"]
+    seen, _ = _stage_inputs(monkeypatch, spark, kg_inputs, odd_pages, wd,
+                            "exact")
+    for stage in ["sentences", "tagged", "mentions", "triples_raw"]:
+        plan = seen[stage]._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (stage, plan)

@@ -1,6 +1,7 @@
 """WARC source (sources/warc): framing round-trip, gzip members,
-non-response records, padding robustness, binaryFile read, and the
-composition into the html extraction path."""
+non-response records, padding robustness, binaryFile read, one page
+per url for a crawl that repeats urls, and the composition into the
+html extraction path."""
 
 import gzip
 import hashlib
@@ -8,8 +9,8 @@ import hashlib
 from pyspark.sql import functions as F
 
 from ner_extractor_spark.sources.warc import (
-    parse_warc_blob, parse_warc_records, read_warc, synth_warc_files,
-    warc_record_expr, warc_to_pages)
+    parse_warc_blob, parse_warc_records, read_warc, read_warc_pages,
+    synth_warc_files, warc_record_expr, warc_to_pages)
 
 PAGES = [
     ("https://a.test/1", "2024-01-01 00:00:05", "<p>Hello world</p>"),
@@ -119,6 +120,33 @@ def test_read_warc_binaryfile(spark, tmp_path):
     assert got == {u: b.encode() for (u, _, b) in PAGES}
 
 
+def test_read_warc_pages_keeps_latest_capture_per_url(spark, tmp_path):
+    # a crawl that captured a.test/1 three times: the pages keep one row
+    # per url, the latest capture, so run_kg_pipeline's (url, sent_id)
+    # key holds
+    recaptures = [
+        ("https://a.test/1", "2023-12-31 23:59:59", "<p>Older words</p>"),
+        ("https://a.test/1", "2024-06-01 12:00:00", "<p>Newest words</p>"),
+    ]
+    crawl = spark.createDataFrame(
+        PAGES + recaptures, "url string, ts string, body string").select(
+        "url", F.to_timestamp("ts").alias("warc_ts"),
+        F.encode("body", "UTF-8").alias("html"))
+    for r in synth_warc_files(crawl, n_files=2).collect():
+        (tmp_path / f"crawl-{r['file_id']}.warc").write_bytes(
+            bytes(r["content"]))
+    assert read_warc(spark, str(tmp_path)).count() == 5
+    pages = read_warc_pages(spark, str(tmp_path))
+    assert pages.columns == ["url", "warc_ts", "html"]
+    rows = pages.collect()
+    assert len(rows) == len(PAGES)
+    got = {r["url"]: (r["warc_ts"].strftime("%Y-%m-%d %H:%M:%S"),
+                      bytes(r["html"]).decode()) for r in rows}
+    want = {u: (ts, body) for u, ts, body in PAGES}
+    want["https://a.test/1"] = recaptures[1][1:]
+    assert got == want
+
+
 def test_warc_to_pages_feeds_html_extraction(spark):
     # the whole point: WARC -> pages -> html_extract_text recovers
     # the clean text
@@ -145,7 +173,7 @@ def test_synth_files_deterministic_any_partitioning(spark):
 
 def test_warc_feed_drives_kg_pipeline(spark, tmp_path):
     # crawl-native input end to end: gold pages -> WARC files on disk
-    # -> read_warc -> warc_to_pages -> the KG pipeline (use_html=True)
+    # -> read_warc_pages -> the KG pipeline (use_html=True)
     # produces the identical triples as feeding the pages directly
     from ner_extractor_spark import synth
     from ner_extractor_spark.plans.kg_pipeline import run_kg_pipeline
@@ -158,7 +186,7 @@ def test_warc_feed_drives_kg_pipeline(spark, tmp_path):
     for r in synth_warc_files(pages, n_files=2).collect():
         (wdir / f"crawl-{r['file_id']}.warc").write_bytes(
             bytes(r["content"]))
-    via_warc = (warc_to_pages(read_warc(spark, str(wdir)))
+    via_warc = (read_warc_pages(spark, str(wdir))
                 .withColumn("text", F.lit(None).cast("string"))
                 .withColumn("lang", F.lit(None).cast("string")))
     aliases = spark.createDataFrame(synth.alias_rows(), schema=ALIASES)
