@@ -29,17 +29,18 @@ def resolve_run_args(args, cfg: dict) -> dict:
     cfg_synth = cfg.get("synth")
     synth_n = args.synth if args.synth is not None \
         else (0 if cfg_synth in (None, "") else int(cfg_synth))
+    warc = getattr(args, "warc", None) or (
+        str(cfg_paths["warc"]) if cfg_paths.get("warc") else None)
     if args.lang is not None:
         lang_arg = args.lang
     elif "lang" in cfg:
         lang_arg = cfg["lang"] if cfg["lang"] is not None else "all"
     else:
-        lang_arg = "en"
+        # WARC pages carry no language tag: an "en" filter keeps none
+        lang_arg = "all" if warc else "en"
     cfg_run = cfg.get("run_id")
     run_id = args.run_id if args.run_id is not None \
         else ("run0" if cfg_run in (None, "") else str(cfg_run))
-    warc = getattr(args, "warc", None) or (
-        str(cfg_paths["warc"]) if cfg_paths.get("warc") else None)
     # a WARC feed carries html payloads by definition
     use_html = bool(getattr(args, "use_html", None) or cfg.get("use_html")
                     or warc)
@@ -56,11 +57,16 @@ def main(argv=None):
     kg.add_argument("--config",
                     help="YAML config (S6): paths.pages / paths.workdir "
                          "plus lang / run_id / synth; flags override")
-    kg.add_argument("--pages", help="pages table (parquet path or catalog id)")
+    kg.add_argument("--pages",
+                    help="pages table (parquet path or catalog id); a "
+                         "repeated url keeps its latest capture")
     kg.add_argument("--synth", type=int, default=None,
                     help="synthesize N fixture pages instead of --pages")
     kg.add_argument("--workdir")
-    kg.add_argument("--lang", default=None)
+    kg.add_argument("--lang", default=None,
+                    help="keep pages of this language (default en; "
+                         "'all' keeps every page); a run that extracts "
+                         "no sentence exits non-zero")
     kg.add_argument("--use-html", dest="use_html", action="store_true",
                     default=None,
                     help="extract text from the html column via the real "
@@ -68,7 +74,8 @@ def main(argv=None):
     kg.add_argument("--warc", default=None,
                     help="read .warc/.warc.gz files under this dir as the "
                          "page source (crawl-native input; implies "
-                         "--use-html)")
+                         "--use-html and, unless --lang is given, all "
+                         "languages: WARC pages carry no language tag)")
     kg.add_argument("--run-id", default=None)
     kg.add_argument("--linker", default="exact",
                     choices=["exact", "coherent", "embed"],
@@ -243,8 +250,10 @@ def main(argv=None):
         pages = spark.createDataFrame(
             synth.pages_rows(synth.gold_corpus(synth_n)), schema=PAGES)
     else:
-        from ner_extractor_spark.sources.pages import read_pages
-        pages = read_pages(spark, pages_path)
+        from ner_extractor_spark.sources.pages import (latest_capture,
+                                                       read_pages)
+        # run_kg_pipeline keys its rows on url: one capture per url
+        pages = latest_capture(read_pages(spark, pages_path))
     aliases = spark.createDataFrame(synth.alias_rows(), schema=ALIASES)
 
     # S7: persist the resolved run config next to the outputs (paths
@@ -282,6 +291,13 @@ def main(argv=None):
         "triples": res.triples.count(),
         "workdir": workdir,
     }
+    if not out["sentences"]:
+        # an empty run is a failed run, never exit 0
+        spark.stop()
+        raise SystemExit(
+            "kg: no sentences extracted"
+            + (f"; no page passed the language filter --lang {lang}"
+               if lang else ""))
     if getattr(args, "rules", False):
         # over the CANONICAL triples (post alias-linking) — mining on
         # Q-ids, not raw surfaces, so aliases don't split rule support

@@ -1,80 +1,84 @@
-"""Connected components by alternating large-star / small-star joins
-(SURVEY §7.1 M6, J8) — the canonicalization kernel.
+"""Connected components by hash-to-min label propagation with pointer
+jumping (SURVEY §7.1 M6, J8) — the canonicalization kernel.
 
-Algorithm (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14 — public): maintain a parent pointer per node;
-  large-star: for each edge (u,v), attach every neighbour larger than u
-              to u's current minimum neighbour;
-  small-star: attach u and its smaller neighbours to the overall min.
-Implemented here as the simpler but equivalently-converging "hash-to-min"
-variant: iterate  label(v) <- min(label(v), min over neighbours(label(u)))
-until no label changes.  Each iteration is one shuffle join + one
-aggregation; lineage is truncated with ``localCheckpoint`` every
-iteration so the plan doesn't grow (SURVEY §4.3.3).
+State: one row per node, ``(node, nbrs, comp)``: the node's neighbour
+list and its label, the smallest node id it has seen so far.  Labels
+only fall, and each is the id of a node in the same component.
 
-Works on arbitrary id types (we use string entity ids; min = lexical).
-Converges in O(diameter) iterations; alias graphs are near-star-shaped so
-3-5 iterations suffice.  A hard iteration cap guards pathological chains.
+  round 0   group the symmetrized edges by node: ``nbrs`` is the
+            neighbour list, ``comp = min(node, nbrs)``;
+  round k   every node sends its label to its neighbours and keeps the
+            smallest label it receives, its own included: ONE
+            ``groupBy`` over the node rows and the label-carrying
+            neighbour rows, with no join to a separate edge table;
+  jump      each round ends with ``comp <- min(comp, L(comp))``, where
+            ``L`` is the labels at the round's start (round 0: the
+            labels it just computed), a join on ``comp``.
+
+The jump makes a chain of n nodes converge in O(log n) rounds: the
+distance a label has travelled more than doubles every round, where
+propagation alone covers one edge per round.  Each round ends in one
+barrier (``localCheckpoint``), so the plan never grows (SURVEY §4.3.3),
+and the barrier carries an ``Observation`` of whether any label fell:
+the fixpoint test runs no Spark job of its own.  A round in which no
+label falls is the fixpoint: ``comp(a) <= comp(b)`` across every
+symmetric edge, so ``comp`` is constant per component and equals its
+minimum.
+
+A round plans two exchanges, the ``groupBy`` and the join (which AQE
+may turn into a broadcast), plus the barrier.  The edges are read once,
+by round 0's barrier, so an expensive upstream edge pipeline (the LSH
+candidates of ``resolve_duplicates``) runs once.
+
+Works on any orderable id type (string entity ids: min = lexical).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_iter: int = 50) -> DataFrame:
-    """edges(src, dst) -> (node, component) with component = min node id
-    per component (self-loops and duplicate/reversed edges welcome)."""
-    # checkpoint the symmetrized edge set FIRST (r07): the initial
-    # labels derive from it, so ordering the barriers sym -> labels
-    # runs the (possibly expensive — LSH candidate generation in
-    # resolve_duplicates) upstream edge pipeline ONCE; the old order
-    # computed it under both checkpoints.
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-    ).localCheckpoint()
-    # initial label: min(self, min neighbour)
-    labels = (
-        sym.groupBy("a").agg(F.min("b").alias("nb"))
-        .select(F.col("a").alias("node"),
-                F.least(F.col("a"), F.col("nb")).alias("comp"))
-    ).localCheckpoint()
-
+    """edges(src, dst) -> (node, comp) with comp = min node id per
+    component (self-loops and duplicate/reversed edges welcome)."""
+    e = edges.select(F.col(src).alias("node"), F.col(dst).alias("nb"))
+    sym = (e.unionByName(e.select(F.col("nb").alias("node"),
+                                  F.col("node").alias("nb")))
+           .filter(F.col("node").isNotNull() & F.col("nb").isNotNull()))
+    state = (sym.groupBy("node")
+             .agg(F.array_sort(F.collect_set("nb")).alias("nbrs"))
+             .select("node", "nbrs",
+                     F.least("node", F.array_min("nbrs")).alias("comp"),
+                     F.col("node").alias("old")))
+    state, changed = _jump(state, state)
     for _ in range(max_iter):
-        # propagate: candidate label for each node = min(label of neighbours)
-        cand = (
-            sym.join(labels.withColumnRenamed("node", "b"), on="b")
-            .groupBy("a").agg(F.min("comp").alias("ncomp"))
-        )
-        new_labels = (
-            labels.join(cand.withColumnRenamed("a", "node"), on="node", how="left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))).alias("comp"),
-                (F.col("ncomp") < F.col("comp")).alias("changed"),
-            )
-        ).localCheckpoint()
-        changed = new_labels.filter(F.col("changed")).limit(1).count()
-        labels = new_labels.select("node", "comp")
-        if changed == 0:
-            # propagation fixpoint: comp(v) <= comp(u) across every
-            # (symmetric) edge, so comp is CONSTANT per component and
-            # equals the reachable min — the pointer jump below would
-            # be the identity; returning here saves its barrier job
-            # (r07; the result is provably identical).
-            return labels
-        # pointer-jumping (path doubling): comp <- label(comp); turns the
-        # O(diameter) propagation into O(log diameter) rounds on chains.
-        parent = labels.select(F.col("node").alias("comp"),
-                               F.col("comp").alias("gcomp"))
-        labels = (
-            labels.join(parent, on="comp", how="left")
-            .select("node",
-                    F.least(F.col("comp"), F.coalesce("gcomp", "comp")).alias("comp"))
-        ).localCheckpoint()
+        if not changed:
+            return state.select("node", "comp")
+        # each node's label to each neighbour, and the node's own row
+        # (the only one with nbrs and old set)
+        sent = state.select(F.explode("nbrs").alias("node"), "comp")
+        own = state.select("node", "nbrs", "comp", F.col("comp").alias("old"))
+        prop = (own.unionByName(sent, allowMissingColumns=True)
+                .groupBy("node")
+                .agg(F.max("nbrs").alias("nbrs"), F.min("comp").alias("comp"),
+                     F.max("old").alias("old")))
+        state, changed = _jump(prop, state)
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} iterations")
+
+
+def _jump(state: DataFrame, labels: DataFrame) -> tuple[DataFrame, bool]:
+    """Pointer jump ``comp <- min(comp, labels(comp))`` on
+    ``(node, nbrs, comp, old)``, then the round's barrier.  Returns the
+    barrier and whether any ``comp`` fell below ``old`` in the round."""
+    parent = labels.select(F.col("node").alias("comp"),
+                           F.col("comp").alias("pcomp"))
+    obs = Observation()
+    out = (state.join(parent, on="comp", how="left")
+           .select("node", "nbrs",
+                   F.least("comp", F.coalesce("pcomp", "comp")).alias("comp"),
+                   "old")
+           .observe(obs, F.max(F.col("comp") < F.col("old")).alias("changed"))
+           .localCheckpoint())
+    return out, bool(obs.get["changed"])

@@ -44,6 +44,15 @@ def best_alias_rows(aliases: DataFrame) -> DataFrame:
             .filter(F.col("_rk") == 1).drop("_rk"))
 
 
+def alias_dimension(aliases: DataFrame) -> DataFrame:
+    """``best_alias_rows`` plus ``ids``: every entity id the alias
+    names, sorted, so ``ids[0]`` is the alias's smallest entity.  One
+    window partitioning (one exchange) computes both."""
+    ids = F.array_sort(F.collect_set("entity_id").over(
+        Window.partitionBy("alias_norm")))
+    return best_alias_rows(aliases.withColumn("ids", ids))
+
+
 def link_exact(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     """Broadcast alias equi-join; deterministic disambiguation
     (max prior, then min entity_id).

@@ -8,11 +8,24 @@
 Every stage writes a table via the StageManifest (resume = skip stage);
 all stage logic is the declarative operators from ``..operators``.
 
+Linking builds two dictionary-bounded tables once per call, each a
+``localCheckpoint`` barrier: the alias dimension (one row per alias:
+``link_exact``'s best entity and every entity id the alias names) and
+the residual match table (one row per unlinked surface with an LSH or
+embedding match: its entity and every candidate entity).  ``linked`` is
+written from one scan of ``mentions`` broadcast-joined to both; the CC
+edges read the same two tables, so nothing downstream plans the LSH
+again.
+
 Canonicalization semantics: entities that share an LSH candidate pair or
 an alias-dictionary id land in one component; the canonical id is the
-lexicographically smallest entity_id in the component.  Unlinkable
-mentions keep a deterministic surface-derived id ``S-<md5(norm)>`` so the
-triple set is total (nothing silently dropped — north rule lineage).
+lexicographically smallest entity_id in the component.  CC runs on the
+dictionary graph only, with star edges (each entity to the smallest
+entity of its alias or residual surface); every other linked entity is
+its own component and joins back in the ``components`` write.
+Unlinkable mentions keep a deterministic surface-derived id
+``S-<md5(norm)>`` so the triple set is total (nothing silently dropped —
+north rule lineage).
 """
 
 from __future__ import annotations
@@ -24,7 +37,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.cc import connected_components
 from ..operators.extract import extract_sentences
-from ..operators.link import link_exact, lsh_candidates, norm_surface, unlinked
+# link_exact stays importable here with the names below (pipebench's
+# tracer wraps this module's linking calls by name)
+from ..operators.link import (alias_dimension, link_exact,  # noqa: F401
+                              lsh_candidates, norm_surface, unlinked)
 from ..operators.ner import tag_sentences
 from ..operators.spans import extract_mentions
 from ..operators.triples import extract_triples_local
@@ -80,8 +96,9 @@ def run_kg_pipeline(
     page's mention at the same ``(url, sent_id, start)``, so those
     tables show the other page's surfaces, labels and spans.  Nothing
     here checks it (a check would put an exchange on the map-only
-    path); ``sources/warc.read_warc_pages`` keeps one capture per
-    ``url`` for crawl input."""
+    path); ``sources/pages.latest_capture`` keeps one capture per
+    ``url``, and ``cli kg --pages`` and ``sources/warc.read_warc_pages``
+    apply it."""
     man = StageManifest(work_dir)
 
     # stored columns only: sent_text is concat_ws(" ", tokens) (the
@@ -115,94 +132,91 @@ def run_kg_pipeline(
         run_id=run_id)
 
     # --- linking ---------------------------------------------------------
-    # linker='coherent' swaps in document-coherence disambiguation
-    # (operators/link.link_coherent); when coherence is silent (zero
-    # scores) its fallback IS link_exact's (prior, entity_id) rule, so
-    # the two modes agree except where context genuinely disambiguates
-    # (parity pinned in tests/test_pipeline_e2e.py).
-    if linker == "coherent":
-        from ..operators.link import link_coherent
-        lc = link_coherent(mentions, aliases, relatedness)
-        etype = (aliases.groupBy("entity_id")
-                 .agg(F.min("entity_type").alias("entity_type")))
-        linked = (
-            lc.join(F.broadcast(etype), on="entity_id")
-            .join(mentions.select("url", "sent_id", "start", "label"),
-                  on=["url", "sent_id", "start"])
-            .withColumn("alias_norm", norm_surface(F.col("surface"))))
-    elif linker in ("exact", "embed"):
-        linked = link_exact(mentions, aliases)
-    else:
+    # Two dictionary-bounded barriers, each built once and read by both
+    # the linked write and the canonicalization edges (one subtree, two
+    # sinks: ARCHITECTURE "Catalyst posture"):
+    #   dim    one row per alias: link_exact's best entity (max prior,
+    #          tie min entity_id) and ``ids``, every entity it names;
+    #   resid  one row per unlinked surface that has a residual match:
+    #          the linker's entity for it and ``ids``, every candidate
+    #          entity.  Bounded by the distinct unlinked surfaces.
+    if linker not in ("exact", "coherent", "embed"):
         raise ValueError(f"linker: {linker!r} (expected exact|coherent|embed)")
-    # residual near-miss candidates: unlinked surfaces vs alias strings
+    dim = alias_dimension(aliases).localCheckpoint()
     if linker == "embed":
         # dense-retrieval residual resolution: cosine-RANKED top-1 over
         # the same LSH candidate pairs (operators/link.link_embed) —
         # when a typo'd surface band-matches several aliases, the
         # closest one wins instead of the smallest entity id, and
-        # sub-threshold matches fall through to the S- surface ids
+        # sub-threshold matches fall through to the S- surface ids.
+        # One entity per surface, so no entity-merge edges.
         from ..operators.link import link_embed
-        resid_linked = (link_embed(mentions, aliases)
-                        .select("alias_norm", "entity_id"))
-        # ranked resolution picks ONE entity per residual surface, so
-        # the surface contributes no entity-merge edges downstream
-        # (the x < y self-join below is empty by construction)
-        resid_entities = resid_linked
+        resid = (link_embed(mentions, aliases)
+                 .select("alias_norm", "entity_id",
+                         F.array("entity_id").alias("ids")))
     else:
-        resid = unlinked(mentions, aliases).select("alias_norm").distinct()
-        cand = lsh_candidates(resid, "alias_norm",
-                              aliases.select("alias_norm").distinct(),
-                              "alias_norm", broadcast_right=True)
-        # LSH candidates link a residual surface to the entity of the
-        # matched alias — the SAME disambiguation rule as link_exact
-        # (max prior, tie min entity_id), via the shared helper.
-        from ..operators.link import best_alias_rows
-        alias_best = best_alias_rows(aliases).select("alias_norm", "entity_id")
-        resid_entities = (
-            cand.withColumnRenamed("alias_norm_r", "matched_alias")
-            .join(alias_best.withColumnRenamed("alias_norm", "matched_alias"),
-                  on="matched_alias")
-            .select("alias_norm", "entity_id")
-        )
-        resid_linked = resid_entities.groupBy("alias_norm").agg(
-            F.min("entity_id").alias("entity_id"))
-    # one residual pass: every mention without an exact alias takes its
-    # residual surface's entity, else a surface-derived id (totality)
-    resid_mentions = (
-        unlinked(mentions, aliases)
-        .join(F.broadcast(resid_linked), on="alias_norm", how="left")
-        .withColumn("entity_id", F.coalesce(
-            "entity_id", F.concat(F.lit("S-"), F.md5(F.col("alias_norm")))))
-        .withColumn("prior", F.lit(0.0))
-        .withColumn("entity_type", F.col("label"))
-    )
-    linked_total = write_stage(
-        man, "linked",
-        linked.select(*resid_mentions.columns).unionByName(resid_mentions)
-        .select("url", "sent_id", "start", "entity_id", "prior",
-                "entity_type"),
-        run_id=run_id)
+        # LSH candidates link a residual surface to the entity of each
+        # matched alias by link_exact's rule (the dim's best row); the
+        # surface takes the smallest of them
+        surf = unlinked(mentions, dim).select("alias_norm").distinct()
+        cand = lsh_candidates(surf, "alias_norm", dim, "alias_norm",
+                              broadcast_right=True)
+        resid = (
+            cand.join(F.broadcast(dim.select(
+                F.col("alias_norm").alias("alias_norm_r"), "entity_id")),
+                on="alias_norm_r")
+            .groupBy("alias_norm")
+            .agg(F.array_sort(F.collect_set("entity_id")).alias("ids"))
+            .select("alias_norm", F.col("ids")[0].alias("entity_id"), "ids"))
+    resid = resid.localCheckpoint()
+
+    # one scan of mentions: the exact link, else the residual surface's
+    # entity, else a surface-derived id (totality)
+    m = mentions.withColumn("alias_norm", norm_surface(F.col("surface")))
+    if linker == "coherent":
+        # document-coherence disambiguation (operators/link.link_coherent)
+        # picks the exact link; when coherence is silent (zero scores)
+        # its fallback IS link_exact's (prior, entity_id) rule, so the
+        # two modes agree except where context genuinely disambiguates
+        # (parity pinned in tests/test_pipeline_e2e.py)
+        from ..operators.link import link_coherent
+        etype = (aliases.groupBy("entity_id")
+                 .agg(F.min("entity_type").alias("entity_type")))
+        exact = (link_coherent(mentions, aliases, relatedness)
+                 .join(F.broadcast(etype), on="entity_id")
+                 .select("url", "sent_id", "start", "entity_id", "prior",
+                         "entity_type"))
+        m = m.join(exact, on=["url", "sent_id", "start"], how="left")
+    else:
+        m = m.join(F.broadcast(dim.select("alias_norm", "entity_id", "prior",
+                                          "entity_type")),
+                   on="alias_norm", how="left")
+    linked = (
+        m.join(F.broadcast(resid.select(
+            "alias_norm", F.col("entity_id").alias("resid_id"))),
+            on="alias_norm", how="left")
+        .select("url", "sent_id", "start",
+                F.coalesce("entity_id", "resid_id",
+                           F.concat(F.lit("S-"), F.md5("alias_norm")))
+                .alias("entity_id"),
+                F.coalesce("prior", F.lit(0.0)).alias("prior"),
+                F.coalesce("entity_type", "label").alias("entity_type")))
+    linked_total = write_stage(man, "linked", linked, run_id=run_id)
 
     # --- canonicalization ------------------------------------------------
-    # edges: alias ambiguity (same alias -> several ids) + LSH candidate
-    # pairs mapped to entity ids.
-    amb_edges = (
-        aliases.alias("x").join(aliases.alias("y"), on="alias_norm")
-        .filter(F.col("x.entity_id") < F.col("y.entity_id"))
-        .select(F.col("x.entity_id").alias("src"), F.col("y.entity_id").alias("dst"))
-    )
-    # a residual surface LSH-matching several dictionary entities links
-    # those entities into one component
-    lsh_edges = (
-        resid_entities.alias("x").join(resid_entities.alias("y"), on="alias_norm")
-        .filter(F.col("x.entity_id") < F.col("y.entity_id"))
-        .select(F.col("x.entity_id").alias("src"), F.col("y.entity_id").alias("dst"))
-    )
-    edges = amb_edges.unionByName(lsh_edges)
-    self_loops = linked_total.select(
-        F.col("entity_id").alias("src"), F.col("entity_id").alias("dst")).distinct()
-    comps = connected_components(edges.unionByName(self_loops))
-    components = write_stage(man, "components", comps, run_id=run_id)
+    # CC over the dictionary graph only: the star edges of both barriers.
+    # The linked entities outside that graph are their own components:
+    # the components write unions them in, so it keeps every node.
+    comps = connected_components(
+        star_edges(dim).unionByName(star_edges(resid)))
+    nodes = (linked_total.select(F.col("entity_id").alias("node"),
+                                 F.col("entity_id").alias("comp"))
+             .filter(F.col("node").isNotNull()))
+    components = write_stage(
+        man, "components",
+        comps.unionByName(nodes).groupBy("node")
+        .agg(F.min("comp").alias("comp")),
+        run_id=run_id)
 
     # --- final triples ----------------------------------------------------
     lt = linked_total.select(
@@ -235,6 +249,15 @@ def run_kg_pipeline(
 
     return KGResult(sentences, mentions, triples_raw, linked_total,
                     components, triples)
+
+
+def star_edges(groups: DataFrame) -> DataFrame:
+    """``(src, dst)`` edges from every id of each row's sorted ``ids``
+    to ``ids[0]``, the smallest: k - 1 edges for a group of k where the
+    clique has k(k-1)/2, and the same connected components."""
+    return (groups.select(F.explode("ids").alias("src"),
+                          F.col("ids")[0].alias("dst"))
+            .filter(F.col("src") != F.col("dst")))
 
 
 def _triples_with_mentions(triples_raw: DataFrame,

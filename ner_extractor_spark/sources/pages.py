@@ -14,6 +14,10 @@ Two providers:
     table is Iceberg partitioned by days(warc_ts) + bucket(url); `html`
     lives in its own parquet column chunk so column pruning means the
     binary is never fetched unless asked for (SURVEY §4.2).
+
+``latest_capture`` enforces the page key ``run_kg_pipeline`` assumes
+(each ``url`` once) on any pages-shaped table; ``cli kg --pages`` and
+``sources/warc.read_warc_pages`` both apply it.
 """
 
 from __future__ import annotations
@@ -36,6 +40,18 @@ def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
         F.col("lang"),
     )
+
+
+def latest_capture(pages: DataFrame) -> DataFrame:
+    """One row per ``url``, the latest capture: the largest ``warc_ts``,
+    on a tie the larger ``html`` (then the larger of the remaining
+    columns, so the pick is deterministic).  Columns keep their order.
+    One aggregation exchange."""
+    rest = [c for c in pages.columns if c != "url"]
+    order = ["warc_ts", "html"] + [c for c in rest
+                                   if c not in ("warc_ts", "html")]
+    return (pages.groupBy("url").agg(F.max(F.struct(*order)).alias("p"))
+            .select("url", *[f"p.{c}" for c in rest]))
 
 
 def read_pages(spark: SparkSession, location: str) -> DataFrame:

@@ -45,6 +45,8 @@ from pyspark.sql.types import (BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType,
                                TimestampType)
 
+from .pages import latest_capture
+
 _CRLF = "\r\n"
 _HTTP_CT = "text/html; charset=utf-8"
 
@@ -237,11 +239,8 @@ def read_warc_pages(spark: SparkSession, path: str) -> DataFrame:
     one row per url: the latest capture (ties: the larger payload).
     A crawl repeats urls and ``run_kg_pipeline`` keys its rows on
     ``url``; the dedup is one aggregation exchange ahead of the
-    pipeline's map-only path."""
-    latest = F.max(F.struct("warc_ts", "html")).alias("p")
-    return (warc_to_pages(read_warc(spark, path))
-            .groupBy("url").agg(latest)
-            .select("url", "p.warc_ts", "p.html"))
+    pipeline's map-only path (``sources/pages.latest_capture``)."""
+    return latest_capture(warc_to_pages(read_warc(spark, path)))
 
 
 # binaryFile's fixed schema — streaming sources cannot infer it

@@ -385,12 +385,18 @@ def _stage_inputs(monkeypatch, spark, kg_inputs, pages, wd, linker):
     handed to write (stage -> DataFrame) and the ``KGResult``."""
     seen = {}
     orig = kg_pipeline.write_stage
+    orig_cc = kg_pipeline.connected_components
 
     def spy(man, stage, df, *a, **k):
         seen[stage] = df
         return orig(man, stage, df, *a, **k)
 
+    def cc_spy(edges, *a, **k):
+        seen["cc_edges"] = edges
+        return orig_cc(edges, *a, **k)
+
     monkeypatch.setattr(kg_pipeline, "write_stage", spy)
+    monkeypatch.setattr(kg_pipeline, "connected_components", cc_spy)
     return seen, _run_linker(spark, kg_inputs, pages, wd, linker)
 
 
@@ -426,3 +432,25 @@ def test_pages_to_triples_raw_stages_are_exchange_free(spark, kg_inputs,
     for stage in ["sentences", "tagged", "mentions", "triples_raw"]:
         plan = seen[stage]._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, (stage, plan)
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("linker", LINKERS)
+def test_linked_and_cc_read_the_link_barriers(spark, kg_inputs, odd_pages,
+                                              kg_by_linker, monkeypatch,
+                                              linker):
+    """The alias dimension and the residual match table are built once:
+    ``linked`` is written from one scan of ``mentions``, and neither the
+    CC edges nor the ``components`` frame plan the residual MinHash-LSH
+    again (no md5 over shingles; they read the barriers)."""
+    _, _, wd = kg_by_linker[linker]
+    seen, _ = _stage_inputs(monkeypatch, spark, kg_inputs, odd_pages, wd,
+                            linker)
+    for key in ("cc_edges", "components"):
+        assert "md5" not in _plan(seen[key]), (key, _plan(seen[key]))
+    scans = [ln for ln in _plan(seen["linked"]).splitlines()
+             if "FileScan" in ln and f"{wd / 'mentions'}]" in ln]
+    assert len(scans) == 1, _plan(seen["linked"])

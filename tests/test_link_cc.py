@@ -3,8 +3,10 @@
 from pyspark.sql import functions as F
 
 from ner_extractor_spark.operators.cc import connected_components
-from ner_extractor_spark.operators.link import (link_exact, lsh_candidates,
-                                                norm_surface, unlinked)
+from ner_extractor_spark.operators.link import (alias_dimension, link_exact,
+                                                lsh_candidates, norm_surface,
+                                                unlinked)
+from ner_extractor_spark.plans.kg_pipeline import star_edges
 from ner_extractor_spark.schemas import ALIASES
 
 MEN = "url string, sent_id int, start int, end int, surface string, label string"
@@ -33,6 +35,47 @@ def test_cc_converges_on_long_chain(spark):
     df = spark.createDataFrame(edges, "src long, dst long")
     comp = connected_components(df, max_iter=15)
     assert comp.filter(F.col("comp") != 0).count() == 0
+
+
+def test_star_edges_give_clique_components(spark):
+    """The pipeline's CC edges: each alias's and each residual surface's
+    entities joined to their smallest (``star_edges``) give the same
+    components as the all-pairs cliques, with fewer edges."""
+    aliases = spark.createDataFrame([
+        # one alias shared by 5 entities (a 10-edge clique, 4 star edges)
+        ("jordan", "Q4", "PER", 0.4), ("jordan", "Q2", "PER", 0.3),
+        ("jordan", "Q8", "LOC", 0.2), ("jordan", "Q6", "ORG", 0.1),
+        ("jordan", "Q5", "PER", 0.5),
+        ("air jordan", "Q8", "PROD", 0.6), ("air jordan", "Q11", "PROD", 0.9),
+        ("acme", "Q20", "ORG", 1.0), ("acme corp", "Q21", "ORG", 1.0),
+        ("solo", "Q30", "ORG", 1.0),
+    ], ALIASES)
+    # residual surfaces: one LSH-matched two aliases' entities, which
+    # merges their components; one matched a single entity
+    resid = spark.createDataFrame(
+        [("acme co", ["Q20", "Q21"]), ("jordn", ["Q2"])],
+        "alias_norm string, ids array<string>")
+
+    def clique(t):
+        return (t.alias("x").join(t.alias("y"), on="alias_norm")
+                .filter(F.col("x.entity_id") < F.col("y.entity_id"))
+                .select(F.col("x.entity_id").alias("src"),
+                        F.col("y.entity_id").alias("dst")))
+
+    cliques = clique(aliases.select("alias_norm", "entity_id")).unionByName(
+        clique(resid.select("alias_norm",
+                            F.explode("ids").alias("entity_id"))))
+    stars = star_edges(alias_dimension(aliases)).unionByName(
+        star_edges(resid))
+    assert (stars.count(), cliques.count()) == (6, 12)
+
+    def comps(edges):
+        return sorted(map(tuple, connected_components(edges).collect()))
+    got = comps(stars)
+    assert got == comps(cliques)
+    assert got == sorted([(q, "Q11") for q in ("Q11", "Q2", "Q4", "Q5",
+                                               "Q6", "Q8")]
+                         + [("Q20", "Q20"), ("Q21", "Q20")])
 
 
 def test_link_exact_ambiguity_deterministic(spark):

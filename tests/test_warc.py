@@ -208,6 +208,10 @@ def test_resolve_run_args_warc_implies_html():
                             warc="/tmp/crawl")
     run = resolve_run_args(ns, {})
     assert run["warc"] == "/tmp/crawl" and run["use_html"] is True
+    # WARC pages carry no language tag: no --lang means all languages
+    assert run["lang"] == "all"
+    ns.lang = "de"
+    assert resolve_run_args(ns, {})["lang"] == "de"
     # config-supplied warc path works the same way
     ns2 = argparse.Namespace(pages=None, workdir=None, synth=None,
                              lang=None, run_id=None, use_html=None,
