@@ -30,6 +30,10 @@ its map-only path no column an earlier stage holds
 
 * ``sentences`` stores ``tokens`` and rebuilds
   ``sent_text = concat_ws(" ", tokens)`` on read;
+* ``tagged`` stores ``(url, sent_id, pred_tags)``: ``mentions`` and
+  ``triples_raw`` read ``tokens`` from the tagger's persisted output,
+  which the ``tagged`` write fills, not from a join to ``sentences``;
+  a resume past ``tagged`` re-runs the deterministic tagger;
 * ``triples_raw`` stores ``(url, sent_id, subj_start, pred, obj_start)``
   and ``linked`` ``(url, sent_id, start, entity_id, prior,
   entity_type)``; ``KGResult`` joins the surface and label of each
@@ -38,12 +42,10 @@ its map-only path no column an earlier stage holds
   ``(url, sent_id, start)``.  No downstream stage reads those columns,
   so the joins stay off the pipeline's own path.
 
-``tagged`` keeps its copy of ``tokens``: a join back to ``sentences``
-would sit on the exchange-free pages -> triples_raw path.  Stage
-tables written before a column was dropped still hold it and still
-resume: the read-back selects the narrower schema.  The manifest
-stores each stage's path relative to its base dir, so a moved work dir
-still resumes.
+Stage tables written before a column was dropped (``tagged`` with
+``tokens``, say) still hold it and still resume: the read-back selects
+the narrower schema.  The manifest stores each stage's path relative
+to its base dir, so a moved work dir still resumes.
 """
 
 from __future__ import annotations

@@ -111,25 +111,33 @@ def run_kg_pipeline(
         .drop("sent_text"),
         run_id=run_id).withColumn("sent_text", F.array_join("tokens", " "))
 
-    # tagged keeps tokens: joining them back from sentences would put an
-    # exchange on the map-only pages -> triples_raw path once sentences
-    # outgrow the broadcast size
-    tagged = write_stage(
-        man, "tagged", tag_sentences(sentences, tagger_dictionary), run_id=run_id)
+    # The tagger's output has three sinks (tagged, mentions,
+    # triples_raw).  It is persisted, not read back: the tagged write's
+    # own job fills the cache, so tagged stores only the column it adds
+    # and mentions and triples_raw read tokens from the cache, with no
+    # join to sentences on the map-only pages -> triples_raw path.  A
+    # resume past tagged re-runs the deterministic tagger.
+    tagged = tag_sentences(sentences, tagger_dictionary).persist()
+    try:
+        write_stage(man, "tagged", tagged.select("url", "sent_id", "pred_tags"),
+                    run_id=run_id)
 
-    mentions = write_stage(
-        man, "mentions", extract_mentions(tagged), run_id=run_id)
+        mentions = write_stage(
+            man, "mentions", extract_mentions(tagged), run_id=run_id)
 
-    # zero-shuffle fused extractor: triple pairing is sentence-local.
-    # triples_raw and linked store their row key and the columns they
-    # add; KGResult joins the mention columns back in lazily, off the
-    # pipeline's own path.
-    from ..operators.triples import DEFAULT_PREDICATES
-    triples_raw = write_stage(
-        man, "triples_raw",
-        extract_triples_local(tagged, predicates=predicates or DEFAULT_PREDICATES)
-        .select("url", "sent_id", "subj_start", "pred", "obj_start"),
-        run_id=run_id)
+        # zero-shuffle fused extractor: triple pairing is sentence-local.
+        # triples_raw and linked store their row key and the columns they
+        # add; KGResult joins the mention columns back in lazily, off the
+        # pipeline's own path.
+        from ..operators.triples import DEFAULT_PREDICATES
+        triples_raw = write_stage(
+            man, "triples_raw",
+            extract_triples_local(tagged,
+                                  predicates=predicates or DEFAULT_PREDICATES)
+            .select("url", "sent_id", "subj_start", "pred", "obj_start"),
+            run_id=run_id)
+    finally:
+        tagged.unpersist()
 
     # --- linking ---------------------------------------------------------
     # Two dictionary-bounded barriers, each built once and read by both
@@ -242,8 +250,12 @@ def run_kg_pipeline(
     # final table so per-entity reads prune partitions (pruning pinned by
     # tests/test_plans.py::test_triples_stage_partition_pruning); at
     # production scale this is the Iceberg partition spec.
-    triples = triples.withColumn(
+    # sorted within each task, so each bucket file's bytes depend only
+    # on its rows, not on the order the join's tasks emit them in
+    triples = (triples.withColumn(
         "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(16)).cast("int"))
+        .sortWithinPartitions("subj_bucket", "subj", "pred", "obj", "url",
+                              "sent_id"))
     triples = write_stage(man, "triples", triples,
                           partition_by=["subj_bucket"], run_id=run_id)
 

@@ -8,8 +8,10 @@ spark-submit entrypoints agree:
   * Arrow batch size sized for the NER UDF (the single biggest throughput
     knob — reference analog is DataLoader batch 32; we use larger Arrow
     batches because the tagger is vectorized).
-  * shuffle.partitions defaults to 2× cores locally; on a real cluster set
-    it from input size (conf override via env/spark-submit).
+  * the master defaults to one local thread per CPU this process may run
+    on (``default_master``); shuffle.partitions defaults to
+    ``DEFAULT_SHUFFLE_PARTITIONS`` whatever the core count.  Both have env
+    overrides; on a real cluster set the partitions from input size.
   * Iceberg catalog is configured ONLY if the runtime jars are present
     (this sandbox has none) — all writers in this repo go through
     plans/checkpoints.py which falls back to partitioned parquet with the
@@ -30,11 +32,18 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 ARROW_MAX_RECORDS = "2048"
 
 
+def default_master(env=os.environ) -> str:
+    """``SPARK_GRAFT_MASTER``, else ``local[SPARK_GRAFT_CPUS]``, else
+    ``local[n]`` with ``n`` the CPUs this process may run on: a fixed
+    thread count would oversubscribe a small host."""
+    cpus = env.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return env.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
+
+
 def get_spark(app_name: str = "ner-extractor-spark",
               master: str | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or (
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    master = master or default_master()
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

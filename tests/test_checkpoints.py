@@ -2,7 +2,8 @@
 commit resumes to the uninterrupted run's tables, lineage counts every
 stage exactly once, a moved work dir resumes, every table is zstd, and
 the KG stages store no column that their read-back derives or joins
-back in from an earlier stage."""
+back in from an earlier stage, nor ``tokens`` twice: ``mentions`` and
+``triples_raw`` read the tagger's output from a persisted frame."""
 
 import json
 import shutil
@@ -92,7 +93,8 @@ def _table_rows(spark, wd, stage):
                       .collect()))
 
 
-@pytest.mark.parametrize("crash_at", ["linked", "triples"])
+@pytest.mark.parametrize("crash_at", ["tagged", "mentions", "linked",
+                                      "triples"])
 def test_kg_crash_before_mark_resumes_identical(spark, kg_inputs, kg_clean,
                                                 tmp_path, monkeypatch,
                                                 crash_at):
@@ -127,6 +129,18 @@ def test_partitioned_stage_has_one_lineage_file(spark, kg_clean):
     assert t["partition_id"] == list(range(len(parts)))
     assert t["row_count"] == [pq.read_metadata(p).num_rows for p in parts]
     assert _lineage_sums(spark, str(kg_clean))["triples"] == n
+
+
+def test_triples_part_files_are_sorted(kg_clean):
+    """Each bucket file holds its rows in key order, so its bytes do not
+    depend on the order the final join's tasks emit them in."""
+    parts = sorted((kg_clean / "triples").rglob("part-*.parquet"))
+    assert parts
+    for p in parts:
+        t = pq.read_table(p).to_pydict()
+        keys = list(zip(*(t[c] for c in ("subj", "pred", "obj", "url",
+                                         "sent_id"))))
+        assert keys == sorted(keys), p
 
 
 def _stage_files(wd):
@@ -310,9 +324,11 @@ def test_linked_alias_norm_is_norm_surface(kg_inputs, kg_by_linker, linker):
             aliases.select("alias_norm", "entity_id")).count() == 0
 
 
-# stage -> columns its read-back derives or joins in from an earlier stage
+# stage -> columns its read-back derives or joins in from an earlier
+# stage, or (tagged) that an earlier stage already stores
 NOT_STORED = {
     "sentences": {"sent_text"},
+    "tagged": {"tokens"},
     "triples_raw": {"subj_surface", "subj_label", "obj_surface",
                     "obj_label"},
     "linked": {"alias_norm", "end", "surface", "label"},
@@ -365,7 +381,8 @@ def test_work_dir_with_wide_stage_tables_resumes(spark, kg_inputs,
     fresh, _, wd = kg_by_linker["exact"]
     old = tmp_path / "old"
     shutil.copytree(wd, old)
-    wide = {"triples_raw": fresh.triples_raw,
+    wide = {"tagged": _tagged(odd_pages),
+            "triples_raw": fresh.triples_raw,
             "linked": fresh.linked.drop("alias_norm")}
     for stage, df in wide.items():
         df.write.mode("overwrite").parquet(str(old / stage))
@@ -432,6 +449,43 @@ def test_pages_to_triples_raw_stages_are_exchange_free(spark, kg_inputs,
     for stage in ["sentences", "tagged", "mentions", "triples_raw"]:
         plan = seen[stage]._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, (stage, plan)
+
+
+def _operators(df):
+    """Node names of ``df``'s executed plan, not descending into the
+    plan a node holds inside it (a cached relation's own plan)."""
+    names, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        it = node.children().iterator()
+        while it.hasNext():
+            stack.append(it.next())
+    return names
+
+
+def test_mentions_and_triples_raw_read_the_persisted_tagger_output(
+        spark, kg_inputs, odd_pages, tmp_path, monkeypatch):
+    """On a fresh run the tagger is planned once: ``mentions`` and
+    ``triples_raw`` are written from an in-memory scan of its persisted
+    output, with no mapInArrow of their own, and the cache is dropped
+    once ``triples_raw`` is written."""
+    seen, ops = {}, {}
+    orig = kg_pipeline.write_stage
+
+    def spy(man, stage, df, *a, **k):
+        if stage in ("mentions", "triples_raw"):
+            seen[stage], ops[stage] = df, _operators(df)
+        return orig(man, stage, df, *a, **k)
+
+    monkeypatch.setattr(kg_pipeline, "write_stage", spy)
+    _run_linker(spark, kg_inputs, odd_pages, tmp_path / "wd", "exact")
+    for stage, names in ops.items():
+        assert "InMemoryTableScan" in names, (stage, names)
+        assert "MapInArrow" not in names, (stage, names)
+        # a new plan over the same frame finds no cache left
+        assert "MapInArrow" in _operators(seen[stage].select("*")), stage
+    assert set(ops) == {"mentions", "triples_raw"}
 
 
 def _plan(df):

@@ -1,12 +1,23 @@
-"""Session factory: package shipping is idempotent per SparkContext;
-concurrent driver chains cancel each other on failure."""
+"""Session factory: the default master fits the host; package shipping
+is idempotent per SparkContext; concurrent driver chains cancel each
+other on failure."""
 
+import os
 import sys
 import time
 
 import pytest
 
-from ner_extractor_spark.session import _ship_package, run_concurrently
+from ner_extractor_spark.session import (_ship_package, default_master,
+                                         run_concurrently)
+
+
+def test_default_master_is_one_thread_per_usable_cpu(monkeypatch):
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    assert default_master({}) == "local[3]"
+    assert default_master({"SPARK_GRAFT_CPUS": "6"}) == "local[6]"
+    assert default_master({"SPARK_GRAFT_MASTER": "local[2]",
+                           "SPARK_GRAFT_CPUS": "6"}) == "local[2]"
 
 
 def test_ship_package_twice_is_a_noop(spark):
